@@ -636,10 +636,12 @@ object Queries {
     // multiples of 64), argmax-raw-dot cell assignment, nprobe=4
     // probed cells, exact-cosine re-rank — the whole lattice replayed
     // by the oracle (assignment uses raw dots, so no sqrt/division
-    // enters the cross-engine argmax decision). Since round 6 the call
-    // goes through the MATERIALIZED build/query split (ivfBuild writes
-    // the cell-partitioned index, ivfQuery partition-prunes to the
-    // probed cells) — the lattice, and hence this oracle, is unchanged.
+    // enters the cross-engine argmax decision). The call goes through
+    // the MATERIALIZED build/query split: ivfBuild writes the
+    // cell-partitioned index, and ivfQuery — q37's batch plan over a
+    // one-row query batch — ranks probes plan-side and partition-prunes
+    // to the probed cells; the lattice, and hence this oracle, is
+    // unchanged.
     "q35_ivf_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val index = cachedIvf(s"q35:$dir")(d => SimilarityOps.ivfBuild(

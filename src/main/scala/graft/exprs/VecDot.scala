@@ -24,13 +24,16 @@ import org.apache.spark.sql.types._
   * BIT-IDENTICAL to the HOF fold by construction, so every persisted
   * oracle hash is unchanged:
   *  - strictly left-to-right accumulation from a 0.0 seed — the same
-  *    IEEE sequence as the fold and as the driver-side
-  *    [[graft.ops.SimilarityOps.dotScala]];
+  *    IEEE sequence as the fold;
   *  - Float elements widen exactly to Double before multiplying;
   *  - NULL when either array is NULL, when lengths differ (zip_with
   *    pads the shorter side with NULL, and a NULL product poisons the
   *    fold), or when any element is NULL — and 0.0 (the seed) for two
   *    empty arrays.
+  *
+  * Inputs are `array<float>` or `array<double>` only — unlike the fold,
+  * which cast any numeric element to double. Integer arrays fail at
+  * analysis time; cast them to `array<double>` first.
   */
 case class VecDot(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -21,7 +21,8 @@ object SimilarityOps {
     * it runs as a tight primitive loop inside whole-stage codegen and
     * participates in common-subexpression elimination, which the
     * interpreted HOF fold (lambda subtrees) never did: a cosine's
-    * twice-referenced denominator used to cost two full folds.
+    * twice-referenced denominator used to cost two full folds. Both
+    * arrays must be `array<float|double>`.
     */
   def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 
@@ -176,12 +177,7 @@ object SimilarityOps {
       .select(col("query_id"), col(idCol),
         round(cosine(col(vecCol), col("_qvec")), 6).as("cos_sim"))
       .distinct()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-    scored
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, idCol, k)
   }
 
   // -------------------------------------------------------------------
@@ -249,20 +245,6 @@ object SimilarityOps {
       .select(col(index.idCol), col(index.vecCol),
         col("_sq8.code").as("code8"), col("_sq8.scale").as("scale8"),
         col("_sq8.cnorm").as("cnorm8"), col("cell"))
-  }
-
-  /** Driver-side twin of the assignment/probe dot product: the HOF
-    * fold `aggregate(zip_with(vec, c, x·c), 0.0, +)` sums strictly
-    * left-to-right, and this fold performs the identical IEEE sequence
-    * (Float→Double per element, multiply, running add) — so cells
-    * computed plan-side and probes ranked driver-side agree exactly.
-    */
-  def dotScala(vec: Seq[Double], c: Seq[Double]): Double = {
-    var acc = 0.0
-    var j = 0
-    val n = math.min(vec.length, c.length)
-    while (j < n) { acc += vec(j) * c(j); j += 1 }
-    acc
   }
 
   /** Deterministic sampled centroid bootstrap of classic IVF: the
@@ -614,8 +596,8 @@ object SimilarityOps {
     * descending-raw-dot centroid order. So the whole curve falls out
     * of the exact top-k (one brute-force pass over the index rows,
     * Q-sample × corpus scored) joined to the per-query cell ranking
-    * (plan-side vs the literal centroid matrix — the exact
-    * [[ivfQueryBatch]] probe lattice):
+    * ([[probeRanking]] — the serving paths' own probe order, kept in
+    * full instead of cut at nprobe):
     * `hits(n) = Σ_q |{exact top-k of q} with cell-rank ≤ n|`,
     * `recall@k(nprobe=n) = hits(n) / (Q·k)`.
     *
@@ -631,34 +613,18 @@ object SimilarityOps {
       spark: org.apache.spark.sql.SparkSession, index: IvfIndex,
       queries: DataFrame, qidCol: String, qvecCol: String,
       k: Int): (Seq[Long], Long) = {
-    val mat = typedlit(index.centroids)
     val nc = index.centroids.length
     val qv = queries.select(col(qidCol).as("query_id"),
       col(qvecCol).as("_qvec"))
-    // per-query cell ranking, plan-side (the ivfQueryBatch probe
-    // lattice with the full ranking kept, not sliced to nprobe)
-    val cellRanks = qv
-      .select(col("query_id"),
-        transform(mat, c =>
-          call_function("vec_dot", col("_qvec"), c)).as("_dots"))
-      .select(col("query_id"),
-        posexplode(transform(
-          array_sort(zip_with(
-            col("_dots"), sequence(lit(0), lit(nc - 1)),
-            (d, i) => struct((-d).as("nd"), i.as("cell")))),
-          p => p("cell").cast("int"))).as(Seq("pos", "cell")))
-      .select(col("query_id"), col("cell"),
-        (col("pos") + 1).cast("int").as("cellrank"))
+    val cellRanks = probeRanking(index, queries, qidCol, qvecCol, None)
+      .select(col("query_id"), col("cell"), col("cellrank"))
     // exact top-k per query over the index rows (which carry `cell`)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col(index.idCol).asc)
-    val exactTopK = readCells(spark, index)
-      .join(broadcast(qv))
-      .select(col("query_id"), col(index.idCol), col("cell"),
-        round(cosine(col(index.vecCol), col("_qvec")), 6).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val exactTopK = topKPerQuery(
+      readCells(spark, index)
+        .join(broadcast(qv))
+        .select(col("query_id"), col(index.idCol), col("cell"),
+          round(cosine(col(index.vecCol), col("_qvec")), 6).as("cos_sim")),
+      index.idCol, k)
       .select(col("query_id"), col("cell"))
     val perRank = exactTopK
       .join(cellRanks, Seq("query_id", "cell"))
@@ -727,11 +693,19 @@ object SimilarityOps {
     * SIZE cannot silently reuse it (advisor, round 7 — the (k, count)
     * check fenced index content but not sample identity). The collect
     * is bounded by the sample size — the caller's own tuning sample,
-    * small by design (it already paid a count() here before).
+    * small by design (it already paid a count() here before). Each id
+    * enters the digest length-prefixed, so no id set can collide with
+    * another by splitting or joining ids (`["1,2"]` vs `["1","2"]`).
+    * A NULL id has no identity to hash and is rejected.
     */
   def ivfSampleTag(ids: Seq[String]): String = {
+    require(!ids.contains(null), "recall sample holds a NULL query id")
     val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(ids.sorted.mkString(",").getBytes("UTF-8"))
+    ids.sorted.foreach { id =>
+      val b = id.getBytes("UTF-8")
+      md.update(java.nio.ByteBuffer.allocate(4).putInt(b.length).array())
+      md.update(b)
+    }
     md.digest().map("%02x".format(_)).mkString
   }
 
@@ -804,90 +778,106 @@ object SimilarityOps {
       .withColumn("nprobe", lit(np).cast("int"))
   }
 
-  /** Query a materialized index with an explicit query vector: probe
-    * cells are ranked DRIVER-SIDE against the persisted centroids
-    * (≤ C dot products — no corpus scan, no join), and the candidate
-    * read partition-prunes to exactly the `nprobe` probed cells
-    * (PartitionFilters on `cell` — PlanSpec-asserted): with C cells
-    * the query touches ~nprobe/C of the corpus, and the plan is
-    * scan → project(cosine) → TakeOrderedAndProject, join-free.
+  /** The one IVF probe ranking: per query row, cells by descending raw
+    * dot against the build's centroid matrix, ties to the lowest cell
+    * (array_sort over struct(-d, cell); SQL treats -0.0 and 0.0 as one
+    * tie). One row (query_id, _qvec, _qnorm, cell) per probed cell: the
+    * first `nprobe`, or with `None` all C plus their 1-based `cellrank`.
+    * Dots and norm are projected BEFORE the explode (interpreted-HOF
+    * pitfall); columns a caller never reads are pruned from its plan.
     */
-  def ivfQuery(
-      spark: org.apache.spark.sql.SparkSession, index: IvfIndex,
-      queryVec: Seq[Double], k: Int, nprobe: Int): DataFrame = {
-    // descending dot, ties → lowest cell: the exact order the round-5
-    // in-plan array_sort over struct(-d, cell) produced (primitive ==
-    // treats -0.0/0.0 as the same tie both here and in SQL ordering)
-    val probes = index.centroids.zipWithIndex
-      .map { case (c, i) => (dotScala(queryVec, c), i) }
-      .sortWith((a, b) => if (a._1 != b._1) a._1 > b._1 else a._2 < b._2)
-      .take(nprobe).map(_._2)
-    val candidates = readCells(spark, index)
-      .filter(col("cell").isin(probes.map(Int.box): _*))
-    val qv = typedlit(queryVec)
-    val top = candidates
-      .select(col(index.idCol),
-        round(cosine(col(index.vecCol), qv), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(index.idCol).asc).limit(k)
-    withRank(top, index.idCol)
+  private def probeRanking(
+      index: IvfIndex, queries: DataFrame, qidCol: String, qvecCol: String,
+      nprobe: Option[Int]): DataFrame = {
+    val nc = index.centroids.length
+    val dotted = queries
+      .select(col(qidCol).as("query_id"), col(qvecCol).as("_qvec"),
+        transform(typedlit(index.centroids), c =>
+          call_function("vec_dot", col(qvecCol), c)).as("_dots"),
+        sqrt(call_function("vec_dot", col(qvecCol), col(qvecCol)))
+          .as("_qnorm"))
+    val order = array_sort(zip_with(
+      col("_dots"), sequence(lit(0), lit(nc - 1)),
+      (d, i) => struct((-d).as("nd"), i.as("cell"))))
+    def cells(ranked: Column) = transform(ranked, p => p("cell").cast("int"))
+    val keep = Seq(col("query_id"), col("_qvec"), col("_qnorm"))
+    nprobe match {
+      case Some(n) =>
+        dotted.select(keep :+ explode(cells(slice(order, 1, n))).as("cell"): _*)
+      case None =>
+        dotted.select(keep :+ posexplode(cells(order)).as(Seq("pos", "cell")): _*)
+          .withColumn("cellrank", (col("pos") + 1).cast("int")).drop("pos")
+    }
   }
 
-  /** [[ivfQuery]] over the SQ8-quantized codes with exact re-rank —
-    * the 100-TB bytes story: the candidate-SCORING pass reads 1 byte
-    * per dimension plus one precomputed norm instead of the 4-byte
-    * float vector (cosine needs no scale — it cancels against the
-    * code norm), so the pass that touches every candidate moves ~4×
-    * fewer bytes (spec-asserted: its scan's ReadSchema carries
-    * `code8`/`cnorm8` and NOT the embedding column). The top
-    * `k·rerank` approximate candidates (asymmetric [[graft.exprs
-    * .Int8Dot]] — full-precision query against quantized codes, a
-    * tight codegen'd byte loop) are then re-ranked by EXACT cosine in
-    * a second pass that reads full vectors for ONLY those rows (an
-    * id-pushed filter over the same pruned cells; the collect is
-    * bounded by k·rerank, never corpus-sized). Requires
-    * `ivfBuild(quantize = true)`; output shape matches [[ivfQuery]].
+  /** The index rows of the probed cells: their union is collected
+    * (≤ C cells, never query- or corpus-sized) into an `isin` on the
+    * partition column, so the scan reads only probed partitions.
     */
-  def ivfQuerySQ(
-      spark: org.apache.spark.sql.SparkSession, index: IvfIndex,
-      queryVec: Seq[Double], k: Int, nprobe: Int,
-      rerank: Int = 4): DataFrame = {
-    require(index.quantized,
-      "ivfQuerySQ needs an index built with quantize = true")
-    val qnorm = math.sqrt(dotScala(queryVec, queryVec))
-    require(qnorm > 0, "zero query vector")
-    val probes = index.centroids.zipWithIndex
-      .map { case (c, i) => (dotScala(queryVec, c), i) }
-      .sortWith((a, b) => if (a._1 != b._1) a._1 > b._1 else a._2 < b._2)
-      .take(nprobe).map(_._2)
-    val pruned = readCells(spark, index)
-      .filter(col("cell").isin(probes.map(Int.box): _*))
-    val qlit = typedlit(queryVec)
-    val approx = sq8ApproxPass(pruned, index, qlit, qnorm)
-    val ids = approx
-      .orderBy(col("approx_sim").desc, col(index.idCol).asc)
-      .limit(k * rerank)
-      .select(col(index.idCol)).collect().map(_.getLong(0)).toSeq
-    val exact = pruned
-      .filter(col(index.idCol).isin(ids.map(Long.box): _*))
-      .select(col(index.idCol),
-        round(cosine(col(index.vecCol), qlit), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(index.idCol).asc).limit(k)
-    withRank(exact, index.idCol)
+  private def probedCells(spark: org.apache.spark.sql.SparkSession,
+      index: IvfIndex, probed: DataFrame): DataFrame = {
+    val cellSet = probed.select(col("cell")).distinct()
+      .collect().map(_.getInt(0)).toSeq
+    readCells(spark, index).filter(col("cell").isin(cellSet.map(Int.box): _*))
   }
 
-  /** Batch quantized serving: [[ivfQuerySQ]]'s two-pass shape for a
-    * whole query DataFrame in ONE plan, with NO query-sized collect —
-    * the only driver-side set is the probed-cell union (bounded by C,
-    * as in [[ivfQueryBatch]]). Pass 1 joins the pruned code columns to
-    * the per-query probe rows ON cell and ranks the asymmetric int8
-    * scores under a window PARTITIONED by query id; the top k·rerank
-    * per query form the shortlist — a Q·k·rerank-row frame that stays
-    * distributed. Pass 2 joins the shortlist back to the pruned cells
-    * on the id column (Spark broadcasts the small shortlist side) and
-    * to the query vectors on query id, re-ranking by exact cosine.
-    * Per query, the result is bit-identical to [[ivfQuerySQ]] (the
-    * plan-side query-norm fold performs the same IEEE sequence as the
-    * driver-side [[dotScala]]); spec-asserted.
+  /** Top-k per query by (desc cos_sim, asc id) under a window
+    * PARTITIONED by query id, never a global sort; `rank <= k` plans a
+    * partial WindowGroupLimit, so only k rows per partition move.
+    */
+  private def topKPerQuery(scored: DataFrame, idCol: String, k: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id"))
+      .orderBy(col("cos_sim").desc, col(idCol).asc)
+    scored
+      .withColumn("rank", row_number().over(w).cast("int"))
+      .filter(col("rank") <= k)
+  }
+
+  /** A one-row query batch. The id is Range's column: a literal id
+    * would fold the window partition and the SQ8 re-rank's join key
+    * away, turning that join into a nested-loop one.
+    */
+  private def oneQuery(
+      spark: org.apache.spark.sql.SparkSession, queryVec: Seq[Double]): DataFrame =
+    spark.range(0, 1, 1, 1)
+      .select(col("id").as("query_id"), typedlit(queryVec).as("_qvec"))
+
+  /** Batch ANN over a materialized index: ONE plan answers MANY
+    * queries. Per query row the probe cells come from [[probeRanking]]
+    * (top-`nprobe`), the scan prunes to their union
+    * ([[probedCells]]), candidates join queries ON cell — each vector
+    * lives in exactly one cell, so no per-query dedup is needed — and
+    * exact cosine (6-dp rounded, id tie-break) ranks per query
+    * ([[topKPerQuery]]). Output: (query_id, idCol, cos_sim, rank).
+    *
+    * Scale: the query side carries Q×nprobe rows (id, vector, cell) —
+    * tiny next to the probed corpus slice, so Spark broadcasts it;
+    * past the broadcast threshold the join degrades to a shuffle hash
+    * on cell, where AQE's skew split handles hot cells (and
+    * [[ivfCellStats]] + `refineIters` exist to keep cells balanced).
+    */
+  def ivfQueryBatch(
+      spark: org.apache.spark.sql.SparkSession, index: IvfIndex,
+      queries: DataFrame, qidCol: String, qvecCol: String,
+      k: Int, nprobe: Int): DataFrame = {
+    val probed = probeRanking(index, queries, qidCol, qvecCol, Some(nprobe))
+    val scored = probedCells(spark, index, probed).join(probed, Seq("cell"))
+      .select(col("query_id"), col(index.idCol),
+        round(cosine(col(index.vecCol), col("_qvec")), 6).as("cos_sim"))
+    topKPerQuery(scored, index.idCol, k)
+  }
+
+  /** Batch quantized serving in ONE plan with NO query-sized collect.
+    * Pass 1 joins the pruned code columns to the probe rows ON cell and
+    * ranks the asymmetric int8 score ([[graft.exprs.Int8Dot]]; cosine
+    * needs no scale, it cancels against the code norm) per query; its
+    * scan reads 1 byte per dimension plus one norm instead of the
+    * float vector (spec-asserted ReadSchema: `code8`/`cnorm8`, no
+    * embedding). The top k·rerank per query form a distributed
+    * shortlist; pass 2 joins it back to the pruned cells on id and to
+    * the query vectors, re-ranking by exact cosine. Requires
+    * `ivfBuild(quantize = true)`; output shape matches [[ivfQueryBatch]].
     */
   def ivfQuerySQBatch(
       spark: org.apache.spark.sql.SparkSession, index: IvfIndex,
@@ -895,26 +885,8 @@ object SimilarityOps {
       k: Int, nprobe: Int, rerank: Int = 4): DataFrame = {
     require(index.quantized,
       "ivfQuerySQBatch needs an index built with quantize = true")
-    val mat = typedlit(index.centroids)
-    val nc = index.centroids.length
-    // probe cells + query norm, both projected BEFORE the explode (the
-    // interpreted-HOF pitfall — one fold each, not one per probe row)
-    val probed = queries
-      .select(col(qidCol).as("query_id"), col(qvecCol).as("_qvec"),
-        transform(mat, c =>
-          call_function("vec_dot", col(qvecCol), c)).as("_dots"),
-        sqrt(call_function("vec_dot", col(qvecCol), col(qvecCol)))
-          .as("_qnorm"))
-      .select(col("query_id"), col("_qvec"), col("_qnorm"),
-        explode(transform(
-          slice(array_sort(zip_with(
-            col("_dots"), sequence(lit(0), lit(nc - 1)),
-            (d, i) => struct((-d).as("nd"), i.as("cell")))), 1, nprobe),
-          p => p("cell").cast("int"))).as("cell"))
-    val cellSet = probed.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val pruned = readCells(spark, index)
-      .filter(col("cell").isin(cellSet.map(Int.box): _*))
+    val probed = probeRanking(index, queries, qidCol, qvecCol, Some(nprobe))
+    val pruned = probedCells(spark, index, probed)
     val approx = pruned
       .select(col(index.idCol), col("code8"), col("cnorm8"), col("cell"))
       .join(probed, Seq("cell"))
@@ -937,152 +909,48 @@ object SimilarityOps {
         col(qvecCol).as("_qvec2")), Seq("query_id"))
       .select(col("query_id"), col(index.idCol),
         round(cosine(col(index.vecCol), col("_qvec2")), 6).as("cos_sim"))
-    val w2 = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col(index.idCol).asc)
-    exact
-      .withColumn("rank", row_number().over(w2).cast("int"))
-      .filter(col("rank") <= k)
+    topKPerQuery(exact, index.idCol, k)
   }
 
-  /** The quantized scoring projection of [[ivfQuerySQ]], factored so
-    * its plan is assertable: the ONLY data columns it references are
-    * `code8` and `cnorm8` — the scan's ReadSchema must not contain
-    * the embedding column (the 4×-fewer-bytes claim, spec-asserted).
+  /** [[ivfQueryBatch]] for one explicit query vector — a batch of one.
+    * Output: (idCol, cos_sim, rank).
     */
-  private[graft] def sq8ApproxPass(
-      pruned: DataFrame, index: IvfIndex, qlit: Column,
-      qnorm: Double): DataFrame =
-    pruned.select(col(index.idCol),
-      when(col("cnorm8") > 0,
-        call_function("int8_dot", col("code8"), qlit) /
-          (lit(qnorm) * col("cnorm8")))
-        .otherwise(lit(0.0)).as("approx_sim"))
-
-  /** Batch ANN over a materialized index: ONE plan answers MANY
-    * queries — the serving shape when queries arrive in batches
-    * rather than one at a time. Per query row, probe cells are
-    * computed PLAN-SIDE against the same literal centroid matrix the
-    * build used (top-`nprobe` by descending raw dot, cell-index
-    * tie-break — the exact [[ivfQuery]] ranking, expressed as
-    * array_sort over struct(-d, cell), where SQL comparison treats
-    * -0.0 and 0.0 as the same tie the driver-side primitive `==`
-    * does). The index scan still partition-prunes: the union of
-    * probed cells is collected first (bounded by the number of
-    * centroids C — never query- or corpus-sized) and becomes an
-    * `isin` on the partition column, so only probed partitions are
-    * read even when the query batch is a DataFrame. Candidates then
-    * join queries ON cell — each vector lives in exactly one cell, so
-    * no per-query dedup is needed — and top-k ranks per query under a
-    * window PARTITIONED BY query id: hash-distributed across
-    * executors, never the single-partition global sort the suite
-    * forbids. Output: (query_id, idCol, cos_sim, rank).
-    *
-    * Scale: the query side carries Q×nprobe rows (id, vector, cell) —
-    * tiny next to the probed corpus slice, so Spark broadcasts it;
-    * past the broadcast threshold the join degrades to a shuffle hash
-    * on cell, where AQE's skew split handles hot cells (and
-    * [[ivfCellStats]] + `refineIters` exist to keep cells balanced).
-    */
-  def ivfQueryBatch(
+  def ivfQuery(
       spark: org.apache.spark.sql.SparkSession, index: IvfIndex,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int, nprobe: Int): DataFrame = {
-    val mat = typedlit(index.centroids)
-    val nc = index.centroids.length
-    val probed = queries
-      .select(col(qidCol).as("query_id"), col(qvecCol).as("_qvec"),
-        // dots projected FIRST (interpreted-HOF pitfall: a computed
-        // subtree referenced inside a later lambda re-evaluates per
-        // element)
-        transform(mat, c =>
-          call_function("vec_dot", col(qvecCol), c)).as("_dots"))
-      .select(col("query_id"), col("_qvec"),
-        explode(transform(
-          slice(array_sort(zip_with(
-            col("_dots"), sequence(lit(0), lit(nc - 1)),
-            (d, i) => struct((-d).as("nd"), i.as("cell")))), 1, nprobe),
-          p => p("cell").cast("int"))).as("cell"))
-    // bounded collect: ≤ C distinct cells across the whole batch — the
-    // prune set for PartitionFilters, independent of Q and corpus size
-    val cellSet = probed.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val candidates = readCells(spark, index)
-      .filter(col("cell").isin(cellSet.map(Int.box): _*))
-    val scored = candidates.join(probed, Seq("cell"))
-      .select(col("query_id"), col(index.idCol),
-        round(cosine(col(index.vecCol), col("_qvec")), 6).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col(index.idCol).asc)
-    scored
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
+      queryVec: Seq[Double], k: Int, nprobe: Int): DataFrame =
+    ivfQueryBatch(spark, index, oneQuery(spark, queryVec),
+      "query_id", "_qvec", k, nprobe).drop("query_id")
+
+  /** [[ivfQuerySQBatch]] for one explicit query vector — a batch of
+    * one; `rerank` covering every probed candidate makes it
+    * bit-identical to [[ivfQuery]]. Output shape matches [[ivfQuery]].
+    */
+  def ivfQuerySQ(
+      spark: org.apache.spark.sql.SparkSession, index: IvfIndex,
+      queryVec: Seq[Double], k: Int, nprobe: Int,
+      rerank: Int = 4): DataFrame = {
+    require(index.quantized,
+      "ivfQuerySQ needs an index built with quantize = true")
+    require(queryVec.map(x => x * x).sum > 0, "zero query vector")
+    ivfQuerySQBatch(spark, index, oneQuery(spark, queryVec),
+      "query_id", "_qvec", k, nprobe, rerank).drop("query_id")
   }
 
   /** [[ivfQuery]] with the query vector fetched by id from the index
-    * itself — a pushed-filter, column-pruned lookup (row-group stats
-    * prune on id; a production deployment would front this with a
-    * key-value lookup).
+    * itself: the id-filtered index rows are the query batch — a
+    * pushed-filter, column-pruned lookup (row-group stats prune on id;
+    * a production deployment would front this with a key-value
+    * lookup). Ids are unique in an index; an absent id yields no rows.
     */
   def ivfQueryById(
       spark: org.apache.spark.sql.SparkSession, index: IvfIndex,
-      queryId: Long, k: Int, nprobe: Int): DataFrame = {
-    val qv = readCells(spark, index)
-      .filter(col(index.idCol) === queryId)
-      .select(col(index.vecCol)).head()
-      .getSeq[Float](0).map(_.toDouble).toSeq
-    ivfQuery(spark, index, qv, k, nprobe)
-  }
+      queryId: Long, k: Int, nprobe: Int): DataFrame =
+    ivfQueryBatch(spark, index,
+      readCells(spark, index).filter(col(index.idCol) === queryId),
+      index.idCol, index.vecCol, k, nprobe).drop("query_id")
 
-  /** One-shot IVF top-k: [[ivfBuild]] into `indexDir` (a fresh temp
-    * dir when omitted) then [[ivfQuery]] — kept as the single-call
-    * convenience the q35 oracle exercises. The lattice (sampled
-    * centroids, argmax-raw-dot assignment, descending-dot probe
-    * ranking, exact-cosine re-rank, id tie-breaks) is unchanged from
-    * the round-5 in-plan form, so the oracle is unchanged — but the
-    * assignment now happens exactly once, materialized, and the
-    * query's scan reads ONLY the probed cell partitions.
-    */
-  def ivfTopK(
-      embeddings: DataFrame, idCol: String, vecCol: String,
-      queryId: Long, k: Int, centroidEvery: Long = 64,
-      maxCentroids: Int = 64, nprobe: Int = 4,
-      indexDir: Option[String] = None): DataFrame = {
-    val spark = embeddings.sparkSession
-    val dir = indexDir.getOrElse(tempIndexDir())
-    val index = ivfBuild(embeddings, idCol, vecCol, dir,
-      centroidEvery, maxCentroids)
-    // the query vector comes from the source frame (pushed filter on
-    // id, column-pruned) — not another corpus pass
-    val qv = embeddings.filter(col(idCol) === queryId)
-      .select(col(vecCol)).head().getSeq[Float](0).map(_.toDouble).toSeq
-    ivfQuery(spark, index, qv, k, nprobe)
-  }
-
-  /** Temp index dirs created by [[ivfTopK]]'s indexDir-less path, all
-    * swept by ONE JVM shutdown hook — without it every invocation
-    * leaked a corpus-sized parquet tree (advisor, round 6). Callers
-    * that need the index to outlive the session pass an explicit
-    * indexDir.
-    */
-  private val tmpIndexDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val tmpCleanupHook: Unit = {
-    sys.addShutdownHook {
-      tmpIndexDirs.forEach(p => deleteRecursively(p.toString))
-    }
-    ()
-  }
-  private def tempIndexDir(): String = {
-    tmpCleanupHook
-    val d = java.nio.file.Files.createTempDirectory("graft_ivf")
-    tmpIndexDirs.add(d)
-    d.toString
-  }
-
-  /** Best-effort recursive delete (shared by temp-index cleanup and
-    * [[graft.pipeline.StreamingIndex.vacuum]]).
+  /** Best-effort recursive delete (index dirs: the registered
+    * queries' cache, [[graft.pipeline.StreamingIndex.vacuum]]).
     */
   private[graft] def deleteRecursively(dir: String): Unit = {
     val root = java.nio.file.Paths.get(dir)

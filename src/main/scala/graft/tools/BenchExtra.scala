@@ -22,20 +22,28 @@ object BenchExtra {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val warmRuns = sys.env.getOrElse("SPARK_GRAFT_EXTRA_WARM", "2").toInt
-    val spark = graft.pipeline.ExtractionPipeline.session("graft-bench-extra", cpus)
-    spark.sparkContext.setLogLevel("ERROR")
     val mode = args.headOption.getOrElse("time")
-    val rest = args.drop(if (mode == "plans") 2 else 1)
+    val (tag, rest) =
+      if (mode == "plans") (args.lift(1).getOrElse(""), args.drop(2))
+      else ("", args.drop(1))
+    // a missing tag, or a query name where the tag belongs, would
+    // otherwise crash or swallow that query name
+    if (mode == "plans" &&
+        (tag.isEmpty || graft.SparkEntry.queries.contains(tag))) {
+      System.err.println("usage: BenchExtra plans <tag> [qname...]")
+      sys.exit(2)
+    }
     val names =
       if (rest.nonEmpty) rest.toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
+    val spark = graft.pipeline.ExtractionPipeline.session("graft-bench-extra", cpus)
+    spark.sparkContext.setLogLevel("ERROR")
 
     def build(name: String): DataFrame =
       graft.SparkEntry.queries(name)(spark, sfDir)
 
     mode match {
       case "plans" =>
-        val tag = args(1)
         val dir = java.nio.file.Paths.get("plans/r08")
         java.nio.file.Files.createDirectories(dir)
         names.foreach { n =>

@@ -32,6 +32,18 @@ class DedupOpsSpec extends AnyFunSuite {
   private lazy val corpus =
     (baseDocs ++ nearDups).toDF("doc_id", "text")
 
+  /** (vec_id, cos_sim, rank) per query id of a batch ANN result, each
+    * sorted by rank.
+    */
+  private def perQuery(
+      df: org.apache.spark.sql.DataFrame): Map[Long, Seq[(Long, Double, Int)]] =
+    df.select(col("query_id").cast("long"), col("vec_id"), col("cos_sim"),
+      col("rank")).as[(Long, Long, Double, Int)].collect().groupBy(_._1)
+      .view.mapValues(_.map(r => (r._2, r._3, r._4)).sortBy(_._3).toSeq).toMap
+
+  private def vecOf(base: Seq[(Long, Array[Float])], id: Long): Seq[Double] =
+    base.find(_._1 == id).get._2.map(_.toDouble).toSeq
+
   test("minhashLshPairs (default xxhash64 path) recalls exactly the planted near-dups") {
     val pairs = DedupOps
       .minhashLshPairs(corpus, "doc_id", "text",
@@ -304,7 +316,7 @@ class DedupOpsSpec extends AnyFunSuite {
     assert(kept == (0L until 40L).toSet)
   }
 
-  test("ivfTopK surfaces a planted near-identical vector from the probed cells") {
+  test("ivfQueryById surfaces a planted near-identical twin from the probed cells") {
     val vrng = new scala.util.Random(17)
     def randVec(): Array[Float] =
       Array.fill(16)((vrng.nextDouble() * 2 - 1).toFloat)
@@ -312,9 +324,11 @@ class DedupOpsSpec extends AnyFunSuite {
     val v0 = base.head._2.clone()
     v0(0) = v0(0) + 1e-4f // near-identical to the query vector 0
     val emb = (base :+ (999L, v0)).toDF("vec_id", "embedding")
+    val root = java.nio.file.Files.createTempDirectory("ivf_twin").toString
+    val index = SimilarityOps.ivfBuild(emb, "vec_id", "embedding",
+      s"$root/index", centroidEvery = 16, maxCentroids = 8)
     val top = SimilarityOps
-      .ivfTopK(emb, "vec_id", "embedding", queryId = 0L, k = 3,
-        centroidEvery = 16, maxCentroids = 8, nprobe = 3)
+      .ivfQueryById(spark, index, queryId = 0L, k = 3, nprobe = 3)
       .select("vec_id", "cos_sim", "rank")
       .as[(Long, Double, Int)].collect().sortBy(_._3)
     // the query itself ranks first at similarity 1.0 (its own cell is
@@ -328,8 +342,8 @@ class DedupOpsSpec extends AnyFunSuite {
 
   test("ivfBuild/ivfQuery: build-once materialized index; queries read ONLY probed cells") {
     // round-5 verdict task 1: the assignment pass runs ONCE (build);
-    // every query is a partition-pruned read of the cell table plus
-    // ≤ C driver-side dot products — no corpus rescan, no join.
+    // every query is a partition-pruned read of the cell table, its
+    // probes ranked against the ≤ C centroids — no corpus rescan.
     val vrng = new scala.util.Random(23)
     def randVec(): Array[Float] =
       Array.fill(16)((vrng.nextDouble() * 2 - 1).toFloat)
@@ -450,11 +464,12 @@ class DedupOpsSpec extends AnyFunSuite {
   }
 
   test("ivfQueryBatch: one plan answers many queries, pruned scan, per-query rank") {
-    // the batch serving shape: plan-side probe ranking must agree
-    // EXACTLY with ivfQuery's driver-side ranking (same descending-dot,
-    // cell-index tie-break), the index scan must still read only
-    // probed cells, and the final rank must be a window PARTITIONED by
-    // query id — never the global sort the suite forbids.
+    // the batch serving shape: every query's answer must equal the
+    // driver-side reference bit for bit (IvfReference: descending-dot
+    // probes with cell-index tie-break, exact cosine over the probed
+    // cells, 6-dp rounding, id tie-break), the index scan must still
+    // read only probed cells, and the final rank must be a window
+    // PARTITIONED by query id — never the global sort the suite forbids.
     val vrng = new scala.util.Random(29)
     def randVec(): Array[Float] =
       Array.fill(16)((vrng.nextDouble() * 2 - 1).toFloat)
@@ -468,17 +483,14 @@ class DedupOpsSpec extends AnyFunSuite {
     val batch = SimilarityOps.ivfQueryBatch(spark, index,
       emb.filter(col("vec_id").isin(qids.map(Long.box): _*)),
       "vec_id", "embedding", k = 4, nprobe = 2)
-    // 1) per-query agreement with the single-query path, bit for bit
-    val got = batch.select(col("query_id").cast("long"), col("vec_id"),
-      col("cos_sim"), col("rank")).as[(Long, Long, Double, Int)]
-      .collect().groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3, r._4))
-        .sortBy(_._3).toSeq).toMap
+    // 1) per-query agreement with the driver-side reference, bit for bit
+    val got = perQuery(batch)
     assert(got.keySet == qids.toSet, got.keySet.toString)
+    val ref = IvfReference.rows(spark, index)
     qids.foreach { q =>
-      val single = SimilarityOps.ivfQueryById(spark, index, q, k = 4, nprobe = 2)
-        .select("vec_id", "cos_sim", "rank")
-        .as[(Long, Double, Int)].collect().sortBy(_._3).toSeq
-      assert(got(q) == single, s"query $q: ${got(q)} vs $single")
+      val want = IvfReference.topK(ref, index.centroids, vecOf(base, q),
+        k = 4, nprobe = 2)
+      assert(got(q) == want, s"query $q: ${got(q)} vs $want")
     }
     // 2) the corpus never re-enters the plan: every file the plan can
     // touch is the index's cell table (the query frame is in-memory
@@ -690,30 +702,35 @@ class DedupOpsSpec extends AnyFunSuite {
     assert(top.head._1 == 0L && top.head._2 == 1.0, top.mkString(", "))
     assert(top.exists(r => r._1 == 999L && r._2 >= 0.9999),
       top.mkString(", "))
+    val ref = IvfReference.rows(spark, index)
+    assert(top == IvfReference.topK(ref, index.centroids, qvd, 3, 3,
+      rerank = Some(4)))
     // 3) with rerank covering every probed candidate, the SQ path is
     // BIT-IDENTICAL to the full-precision query at the same probes
     // (the approximation only prunes; the re-rank score is exact)
     assert(rows(SimilarityOps.ivfQuerySQ(spark, index, qvd, 3, 3,
       rerank = 100)) ==
       rows(SimilarityOps.ivfQuery(spark, index, qvd, 3, 3)))
-    // 4) the bytes claim: the scoring pass's scan reads code8 + cnorm8
-    // and NOT the embedding column (ReadSchema-asserted), and it still
-    // partition-prunes on cell
-    val approx = SimilarityOps.sq8ApproxPass(
-      SimilarityOps.readCells(spark, index)
-        .filter(col("cell").isin(0, 1)),
-      index, typedlit(qvd), 1.0)
+    // 4) the bytes claim: in an ivfQuerySQBatch plan the scoring
+    // pass's scan reads code8 + cnorm8 and NOT the embedding column
+    // (ReadSchema-asserted), and it still partition-prunes on cell
     val out = new java.io.ByteArrayOutputStream()
-    Console.withOut(out) { approx.explain("formatted") }
-    val plan = out.toString
-    val readSchema = plan.linesIterator
+    Console.withOut(out) {
+      SimilarityOps.ivfQuerySQBatch(spark, index,
+        emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
+        k = 3, nprobe = 2).explain("formatted")
+    }
+    val scoringScan = out.toString.split("\n\n")
+      .find(b => b.contains("Scan parquet") && b.contains("code8"))
+      .getOrElse("")
+    val readSchema = scoringScan.linesIterator
       .find(_.contains("ReadSchema")).getOrElse("")
     assert(readSchema.contains("code8") && readSchema.contains("cnorm8"),
-      readSchema)
+      scoringScan)
     assert(!readSchema.contains("embedding"), readSchema)
-    val pf = plan.linesIterator
+    val pf = scoringScan.linesIterator
       .find(_.contains("PartitionFilters")).getOrElse("")
-    assert(pf.contains("cell"), pf)
+    assert(pf.contains("cell") && pf.contains("IN"), pf)
     // 5) interpreted ≡ codegen for the custom expressions
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     try assert(rows(SimilarityOps.ivfQuerySQ(spark, index, qvd,
@@ -722,9 +739,11 @@ class DedupOpsSpec extends AnyFunSuite {
   }
 
   test("ivfQuerySQBatch: one plan answers many queries, per-query identical to ivfQuerySQ") {
-    // the batch quantized path must reproduce the single-query path
-    // bit for bit (plan-side query-norm fold ≡ driver-side dotScala),
-    // rank under query-partitioned windows, and hold no all-pairs join
+    // the batch quantized path must reproduce the driver-side reference
+    // bit for bit (plan-side query-norm fold ≡ IvfReference.dot, the
+    // int8 shortlist, the exact re-rank), and so the single-query form
+    // (a batch of one); rank under query-partitioned windows, and hold
+    // no all-pairs join
     val vrng = new scala.util.Random(41)
     def randVec(): Array[Float] =
       Array.fill(16)((vrng.nextDouble() * 2 - 1).toFloat)
@@ -738,18 +757,18 @@ class DedupOpsSpec extends AnyFunSuite {
     val batch = SimilarityOps.ivfQuerySQBatch(spark, index,
       emb.filter(col("vec_id").isin(qids.map(Long.box): _*)),
       "vec_id", "embedding", k = 4, nprobe = 2, rerank = 3)
-    val got = batch.select(col("query_id").cast("long"), col("vec_id"),
-      col("cos_sim"), col("rank")).as[(Long, Long, Double, Int)]
-      .collect().groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3, r._4))
-        .sortBy(_._3).toSeq).toMap
+    val got = perQuery(batch)
     assert(got.keySet == qids.toSet, got.keySet.toString)
+    val ref = IvfReference.rows(spark, index)
     qids.foreach { q =>
-      val qv = base.find(_._1 == q).get._2.map(_.toDouble).toSeq
-      val single = SimilarityOps.ivfQuerySQ(spark, index, qv,
+      val want = IvfReference.topK(ref, index.centroids, vecOf(base, q),
+        k = 4, nprobe = 2, rerank = Some(3))
+      assert(got(q) == want, s"query $q: ${got(q)} vs $want")
+      val single = SimilarityOps.ivfQuerySQ(spark, index, vecOf(base, q),
         k = 4, nprobe = 2, rerank = 3)
         .select(col("vec_id"), col("cos_sim"), col("rank"))
         .as[(Long, Double, Int)].collect().sortBy(_._3).toSeq
-      assert(got(q) == single, s"query $q: ${got(q)} vs $single")
+      assert(single == want, s"query $q: $single vs $want")
     }
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(out) { batch.explain("formatted") }
@@ -757,6 +776,87 @@ class DedupOpsSpec extends AnyFunSuite {
     assert(p.contains("windowspecdefinition(query_id"), p.take(3000))
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p.take(3000))
+  }
+
+  test("IVF serving ≡ driver-side reference at C = 64 and 1024, exact and SQ8") {
+    // every serving form — batch and single, exact and SQ8 — runs the
+    // one plan-side probe ranking; at a small and a large centroid
+    // count it must reproduce the plain-Scala reference bit for bit.
+    // SQ8 with rerank = 100 covers every probed candidate, so it must
+    // equal the EXACT reference; at rerank = 2 it must equal the
+    // reference's own int8 shortlist.
+    val vrng = new scala.util.Random(43)
+    val base = (0 until 1100).map(i =>
+      (i.toLong, Array.fill(16)((vrng.nextDouble() * 2 - 1).toFloat)))
+    val emb = base.toDF("vec_id", "embedding")
+    val qids = Seq(3L, 500L, 1099L)
+    val queries = emb.filter(col("vec_id").isin(qids.map(Long.box): _*))
+    val root = java.nio.file.Files.createTempDirectory("ivf_ref").toString
+    Seq((64, 16L, 4), (1024, 1L, 16)).foreach { case (c, every, nprobe) =>
+      val index = SimilarityOps.ivfBuild(emb, "vec_id", "embedding",
+        s"$root/c$c", centroidEvery = every, maxCentroids = c,
+        quantize = true)
+      assert(index.centroids.length == c)
+      val ref = IvfReference.rows(spark, index)
+      val k = 5
+      def want(q: Long, rerank: Option[Int] = None) =
+        IvfReference.topK(ref, index.centroids, vecOf(base, q), k, nprobe,
+          rerank)
+      qids.foreach { q =>
+        val probed = IvfReference.probes(vecOf(base, q), index.centroids,
+          nprobe).toSet
+        assert(ref.count(r => probed(r.cell)) <= k * 100,
+          s"C=$c query $q: rerank = 100 must cover every probed candidate")
+      }
+      val exact = perQuery(SimilarityOps.ivfQueryBatch(spark, index,
+        queries, "vec_id", "embedding", k, nprobe))
+      val sqFull = perQuery(SimilarityOps.ivfQuerySQBatch(spark, index,
+        queries, "vec_id", "embedding", k, nprobe, rerank = 100))
+      val sqShort = perQuery(SimilarityOps.ivfQuerySQBatch(spark, index,
+        queries, "vec_id", "embedding", k, nprobe, rerank = 2))
+      qids.foreach { q =>
+        assert(exact(q) == want(q), s"C=$c exact, query $q")
+        assert(sqFull(q) == want(q), s"C=$c SQ8 rerank 100, query $q")
+        assert(sqShort(q) == want(q, Some(2)), s"C=$c SQ8 rerank 2, query $q")
+      }
+      def single(df: org.apache.spark.sql.DataFrame) =
+        df.select("vec_id", "cos_sim", "rank").as[(Long, Double, Int)]
+          .collect().sortBy(_._3).toSeq
+      val q0 = qids.head
+      assert(single(SimilarityOps.ivfQuery(spark, index, vecOf(base, q0),
+        k, nprobe)) == want(q0), s"C=$c ivfQuery")
+      assert(single(SimilarityOps.ivfQuerySQ(spark, index, vecOf(base, q0),
+        k, nprobe, rerank = 2)) == want(q0, Some(2)), s"C=$c ivfQuerySQ")
+      assert(single(SimilarityOps.ivfQueryById(spark, index, q0, k,
+        nprobe)) == want(q0), s"C=$c ivfQueryById")
+    }
+  }
+
+  test("ivfSampleTag: ids are length-prefixed, so a comma inside an id cannot collide") {
+    assert(SimilarityOps.ivfSampleTag(Seq("1,2")) !=
+      SimilarityOps.ivfSampleTag(Seq("1", "2")))
+    assert(SimilarityOps.ivfSampleTag(Seq("12")) !=
+      SimilarityOps.ivfSampleTag(Seq("1", "2")))
+    assert(SimilarityOps.ivfSampleTag(Seq("b", "a")) ==
+      SimilarityOps.ivfSampleTag(Seq("a", "b")))
+  }
+
+  test("ivfQueryBatchAtRecall: a NULL sample id fails with a clear message") {
+    val vrng = new scala.util.Random(47)
+    val rows = (0 until 40).map(i =>
+      (Option(i.toLong).filter(_ != 7L),
+        Array.fill(8)((vrng.nextDouble() * 2 - 1).toFloat)))
+    val emb = rows.toDF("vec_id", "embedding")
+    val root = java.nio.file.Files.createTempDirectory("ivf_null").toString
+    val index = SimilarityOps.ivfBuild(emb.filter(col("vec_id").isNotNull),
+      "vec_id", "embedding", s"$root/index", centroidEvery = 8,
+      maxCentroids = 4)
+    val e = intercept[IllegalArgumentException] {
+      SimilarityOps.ivfQueryBatchAtRecall(spark, index, sample = emb,
+        queries = emb.filter(col("vec_id") === 0L), "vec_id", "embedding",
+        k = 3, targetX1M = 500000L)
+    }
+    assert(e.getMessage.contains("NULL query id"), e.getMessage)
   }
 
   test("lshTopK (default splitmix hyperplanes) surfaces a planted near-identical vector") {
@@ -792,10 +892,7 @@ class DedupOpsSpec extends AnyFunSuite {
     val batch = SimilarityOps.lshTopKBatch(emb, "vec_id", "embedding",
       emb.filter(col("vec_id").isin(qids.map(Long.box): _*)),
       "vec_id", "embedding", k = 4, bits = 8, dims = 16)
-    val got = batch.select(col("query_id").cast("long"), col("vec_id"),
-      col("cos_sim"), col("rank")).as[(Long, Long, Double, Int)]
-      .collect().groupBy(_._1).view
-      .mapValues(_.map(r => (r._2, r._3, r._4)).sortBy(_._3).toSeq).toMap
+    val got = perQuery(batch)
     assert(got.keySet == qids.toSet, got.keySet.toString)
     qids.foreach { q =>
       val single = SimilarityOps.lshTopK(emb, "vec_id", "embedding",

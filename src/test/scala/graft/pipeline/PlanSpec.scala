@@ -156,19 +156,33 @@ class PlanSpec extends AnyFunSuite {
       emb, "vec_id", "embedding", queryId = 0L, k = 10, bits = 8))
     assert(lsh.contains("TakeOrderedAndProject"), lsh.take(3000))
     assert(!lsh.contains("Window"), lsh.take(3000))
-    val ivf = plan(graft.ops.SimilarityOps.ivfTopK(
-      emb, "vec_id", "embedding", queryId = 0L, k = 10))
-    assert(ivf.contains("TakeOrderedAndProject"), ivf.take(3000))
-    assert(!ivf.contains("Window"), ivf.take(3000))
-    // round-6 materialized index: the query is JOIN-FREE (probe cells
-    // are driver-side literals against the persisted centroids) and its
-    // scan PARTITION-PRUNES to the nprobe probed cells — the round-5
-    // full-corpus re-assignment scan is structurally impossible here
-    assert(!ivf.contains("Join"), ivf.take(3000))
-    val pf = ivf.linesIterator.find(_.contains("PartitionFilters"))
-      .getOrElse("")
-    assert(pf.contains("cell") && pf.contains("IN"),
+    // the materialized IVF index, queried as a batch of one: the scan
+    // PARTITION-PRUNES to the nprobe probed cells (the round-5
+    // full-corpus re-assignment scan is structurally impossible here),
+    // the rank window is partitioned by query id, and a partial
+    // WindowGroupLimit sits below that window's exchange — only k rows
+    // per query and partition move, as in TakeOrderedAndProject
+    val index = graft.ops.SimilarityOps.ivfBuild(emb, "vec_id", "embedding",
+      Files.createTempDirectory("graft_plan_ivf").toString,
+      centroidEvery = 64, maxCentroids = 64)
+    val ivf = plan(graft.ops.SimilarityOps.ivfQueryById(
+      spark, index, queryId = 0L, k = 10, nprobe = 4))
+    val pf = ivf.linesIterator.find(l =>
+      l.contains("PartitionFilters") && l.contains("cell")).getOrElse("")
+    assert("cell#\\d+ IN \\(".r.findFirstIn(pf).isDefined,
       s"ivf query must partition-prune on cell, got: $pf\n${ivf.take(3000)}")
+    assert(ivf.contains("windowspecdefinition(query_id"), ivf.take(3000))
+    val exchange = ivf.split("\n\n").map(_.trim)
+      .find(b => b.matches("(?s)\\(\\d+\\) Exchange\\b.*") &&
+        b.contains("hashpartitioning(query_id"))
+      .map(_.takeWhile(_ != ')').drop(1))
+    assert(exchange.isDefined, s"no exchange on query_id:\n${ivf.take(3000)}")
+    val tree = ivf.linesIterator.drop(1).takeWhile(_.trim.nonEmpty).toSeq
+    val at = tree.indexWhere(_.endsWith(s"Exchange (${exchange.get})"))
+    val depth = tree(at).indexWhere(_.isLetter)
+    val below = tree.drop(at + 1).takeWhile(_.indexWhere(_.isLetter) > depth)
+    assert(below.exists(_.contains("WindowGroupLimit")),
+      s"no partial WindowGroupLimit below the exchange:\n${tree.mkString("\n")}")
   }
 
   test("no registered query plan contains a nested-loop or cartesian join") {
