@@ -1,7 +1,9 @@
 package graft.ops
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.pipeline.TableLog
 
 /** Similarity search over an embedding column (array<float>):
   * brute-force cosine top-k as the exact baseline, an LSH
@@ -188,15 +190,16 @@ object SimilarityOps {
   // C×D pass per query that could not partition-prune).
   // -------------------------------------------------------------------
 
-  /** Handle to a materialized IVF index: the cell-partitioned table
-    * under `root/cells` (columns idCol, vecCol, partition column cell;
-    * one directory per cell) plus the exact centroid matrix the
-    * assignment used — persisted alongside the cells (centroids.json,
-    * shortest round-trip double rendering, so a fresh session reloads
+  /** Handle to a materialized IVF index: the cell-partitioned base
+    * table of generation `gen` (columns idCol, vecCol, partition column
+    * cell; one directory per cell) plus the exact centroid matrix the
+    * assignment used — persisted alongside the cells (shortest
+    * round-trip double rendering, so a fresh session reloads
     * bit-identical centroids via [[ivfLoad]]). `deltas` are committed
-    * per-epoch delta tables (same cell-partitioned layout) written by
-    * [[graft.pipeline.StreamingIndex]]; queries read base ∪ deltas,
-    * each root partition-pruning independently.
+    * delta tables (same cell-partitioned layout) written by
+    * [[ivfAppend]] and [[graft.pipeline.StreamingIndex]]; queries read
+    * base ∪ deltas, each root partition-pruning independently. All of
+    * it is what the index's [[TableLog]] snapshot holds.
     */
   final case class IvfIndex(
       root: String, idCol: String, vecCol: String,
@@ -206,12 +209,11 @@ object SimilarityOps {
     def dataPaths: Seq[String] = cellsPath +: deltas
   }
 
-  /** Base cell table of generation `gen`. Generation 0 is the
-    * [[ivfBuild]] layout (`root/cells`); each reader-safe compaction
-    * ([[graft.pipeline.StreamingIndex.compact]]) writes the folded
-    * base to the NEXT generation directory and atomically swaps the
-    * pointer ([[ivfWriteGeneration]]) — handles loaded before the
-    * swap keep reading their own generation's intact files.
+  /** Base cell table of generation `gen`. Generation 0 is the first
+    * [[ivfBuild]] (`root/cells`); each compaction
+    * ([[graft.pipeline.StreamingIndex.compact]]) and each rebuild over
+    * an existing index writes the next generation's directory, so no
+    * writer overwrites what a live handle reads.
     */
   def ivfCellsPath(root: String, gen: Int): String =
     if (gen == 0) s"$root/cells" else s"$root/cells-gen$gen"
@@ -344,41 +346,37 @@ object SimilarityOps {
       if (refineIters > 0)
         refineCentroids(embeddings, idCol, vecCol, sampled, refineIters)
       else sampled
-    val idx0 = IvfIndex(indexDir, idCol, vecCol, cents,
+    val s0 = TableLog.snapshot(indexDir)
+    val gen = if (s0.version < 0) 0 else genOf(s0) + 1
+    val idx0 = IvfIndex(indexDir, idCol, vecCol, cents, gen = gen,
       quantized = quantize)
-    // maxFoldedEpoch read BEFORE any mutation and carried through the
-    // reset (advisor, round 7): silently dropping it to -1 would lose
-    // the replay backstop if the same streaming checkpoint lineage
-    // continues against the rebuilt index
-    val (_, _, maxFolded) = ivfReadGenerationFull(indexDir)
     assignCells(embeddings, idx0)
       .sortWithinPartitions(col("cell"))
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexDir/cells")
-    // a rebuild RESETS the index: deltas assigned under the previous
-    // centroid matrix are stale — retire their manifests and swap the
-    // pointer back to generation 0 BEFORE overwriting centroids.json
-    // (advisor, round 7: the old order let a reader on a gen>0 index
-    // pair the NEW matrix with the OLD generation's cells). NOTE:
-    // rebuild-IN-PLACE is inherently not reader-safe — generation 0's
-    // cell directory is overwritten above, and the pointer and
-    // centroids.json are two files with no joint commit point — so a
-    // rebuild requires no concurrent readers (build into a fresh
-    // indexDir for zero-downtime swaps); this ordering only shrinks
-    // the inconsistent window, it cannot close it.
-    ivfManifestTokens(indexDir).foreach(t =>
-      java.nio.file.Files.deleteIfExists(ivfDeltaManifestToken(indexDir, t)))
-    ivfWriteGeneration(indexDir, 0, Set.empty, maxFolded)
-    // java.lang.Double.toString is the shortest exact round-trip
-    // rendering; parsing it back yields the identical bits
-    val json = "{\"idCol\":\"" + idCol + "\",\"vecCol\":\"" + vecCol +
-      "\",\"sq8\":" + quantize + ",\"centroids\":[" +
-      cents.map(_.map(d => java.lang.Double.toString(d))
-        .mkString("[", ",", "]")).mkString(",") + "]}"
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(indexDir, "centroids.json"), json)
+      .parquet(idx0.cellsPath)
+    val centroidsFile = if (gen == 0) "centroids.json" else s"centroids-gen$gen.json"
+    Files.writeString(Paths.get(indexDir, centroidsFile),
+      TableLog.toJson(CentroidFile(idCol, vecCol, quantize, cents)))
+    // one checkpoint replaces the whole index: the previous base,
+    // deltas and centroids are removed (vacuum deletes them once no
+    // reader needs them); the last streaming epoch carries over as the
+    // replay backstop. Rebuilds are single-writer.
+    TableLog.commit(indexDir)(s => Some(TableLog.Record(
+      Seq(TableLog.Entry(rel(idx0.cellsPath, indexDir)), TableLog.Entry(centroidsFile)),
+      s.paths, s.info ++ Map("gen" -> gen.toString, "centroids" -> centroidsFile),
+      checkpoint = true)))
     idx0
   }
+
+  /** Persisted centroid matrix (java.lang.Double.toString rendering: the
+    * shortest exact round trip, so parsing yields the identical bits).
+    */
+  private final case class CentroidFile(
+      idCol: String, vecCol: String, sq8: Boolean, centroids: Seq[Seq[Double]])
+
+  private def genOf(s: TableLog.Snapshot): Int = s.info("gen").toInt
+
+  private def rel(path: String, root: String): String = path.stripPrefix(s"$root/")
 
   /** Incrementally add vectors to a materialized index — the classic
     * IVF insert: the centroid matrix is FROZEN (assignment stays the
@@ -390,191 +388,60 @@ object SimilarityOps {
     * Cost: one scan of ONLY the new batch + one partitioned append;
     * the existing 10^12-row table is never read or rewritten.
     *
-    * Durability (round 7): the batch is written as a COMMITTED DELTA
-    * — the exact layout [[graft.pipeline.StreamingIndex]] uses for
-    * streaming epochs (cell-partitioned delta dir + atomic tmp+rename
-    * manifest), written synchronously. A crash mid-write leaves an
-    * unmanifested delta dir that no reader ([[ivfLoad]]) ever sees; a
-    * retried append overwrites it under a fresh token. The base table
-    * is never touched, so a crash can no longer poison subsequent
-    * reads with partial part-files. [[graft.pipeline.StreamingIndex
-    * .compact]] folds batch deltas and streaming deltas alike.
-    * Single-writer per index (the suite-wide convention, parity with
-    * [[graft.pipeline.Commit]]): two appenders racing the token
-    * allocation could pick the same token — serialize appends, or use
-    * [[graft.pipeline.StreamingIndex]] where the checkpoint serializes
-    * arrival. Drift note: appends skew cell balance over time; watch
-    * [[ivfCellStats]] and rebuild with `refineIters > 0` when a cell
-    * runs hot.
+    * Durability: the batch is written as a COMMITTED DELTA — the
+    * layout [[graft.pipeline.StreamingIndex]] uses for streaming epochs
+    * (a cell-partitioned delta dir plus one log commit). Its token is
+    * the version it expects to commit, claimed put-if-absent
+    * ([[TableLog.claim]]), so a concurrent appender or a crashed
+    * attempt's leftover takes the next number instead of sharing the
+    * dir. A crash before the commit leaves a delta dir no reader
+    * ([[ivfLoad]]) ever sees. Appends commute with each other and with
+    * compaction (a lost version race just retries); an append that
+    * finds the index rebuilt under it fails, as its cells follow the
+    * old centroids. [[graft.pipeline.StreamingIndex.compact]] folds
+    * batch deltas and streaming deltas alike. Drift note: appends skew
+    * cell balance over time; watch [[ivfCellStats]] and rebuild with
+    * `refineIters > 0` when a cell runs hot.
     */
   def ivfAppend(index: IvfIndex, newVectors: DataFrame): IvfIndex = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    Files.createDirectories(Paths.get(index.root, "_delta_manifest"))
-    val (_, folded) = ivfReadGeneration(index.root)
-    // next unused append token: committed + folded tokens are taken
-    // forever (a folded token's rows live in the base — reusing it
-    // could resurrect them); an UNmanifested dir of the same name is a
-    // crashed attempt and is safely overwritten
-    val used = (ivfManifestTokens(index.root) ++ folded)
-      .collect { case t if t.startsWith("append-") =>
-        t.stripPrefix("append-").toLong }
-    val token = s"append-${if (used.isEmpty) 0L else used.max + 1L}"
-    val path = ivfDeltaPathToken(index.root, token)
+    val s0 = TableLog.snapshot(index.root)
+    val token = TableLog.claim(index.root, "delta/append-", s0.version + 1)
+    val path = s"${index.root}/$token"
     assignCells(newVectors, index)
       .sortWithinPartitions(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
+      .write.mode("append").partitionBy("cell")
       .parquet(path)
-    val rows = newVectors.sparkSession.read.parquet(path).count()
-    val tmp = Paths.get(index.root, "_delta_manifest", s".$token.json.tmp")
-    Files.writeString(tmp, s"""{"token":"$token","rowCount":$rows}""")
-    Files.move(tmp, ivfDeltaManifestToken(index.root, token),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    TableLog.commit(index.root) { s =>
+      require(s.info.get("centroids") == s0.info.get("centroids"),
+        s"index ${index.root} was rebuilt during the append; append again")
+      Some(TableLog.Record(Seq(TableLog.Entry(token))))
+    }
     index.copy(deltas = index.deltas :+ path)
   }
 
   /** Reload an index handle written by [[ivfBuild]] (fresh session /
-    * query-only deployment — nothing is recomputed). Committed
-    * streaming deltas under the index root are picked up automatically
-    * — an epoch delta written but never manifest-renamed (crash) stays
-    * invisible until its replay commits it.
+    * query-only deployment — nothing is recomputed): the base, the
+    * committed deltas and the centroids of the current log snapshot.
+    * A delta written but never committed (crash) stays invisible.
     */
-  def ivfLoad(indexDir: String): IvfIndex = {
-    val json = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(indexDir, "centroids.json"))
-    def field(name: String): String =
-      ("\"" + name + "\":\"([^\"]*)\"").r.findFirstMatchIn(json)
-        .getOrElse(sys.error(s"bad centroids.json: no $name")).group(1)
-    val cents = "\\[([^\\[\\]]+)\\]".r.findAllMatchIn(
-        json.substring(json.indexOf("\"centroids\"")))
-      .map(_.group(1).split(",").map(_.toDouble).toSeq).toSeq
-    // Manifest listing BEFORE the single pointer read — the order that
-    // makes a load racing a compaction consistent: if the pointer
-    // (read second) still shows generation G, the swap had not yet
-    // happened when the earlier listing ran, so the listing is
-    // complete for G's delta set; if it already shows G+1, the folded
-    // filter strips exactly what G+1 absorbed (compaction retires
-    // manifests only AFTER the swap). Pointer-first would allow
-    // (old gen, post-retirement empty listing) — a handle silently
-    // missing the folded rows.
-    val listed = ivfManifestTokens(indexDir)
-    val (gen, folded, _) = ivfReadGenerationFull(indexDir)
-    IvfIndex(indexDir, field("idCol"), field("vecCol"), cents,
-      listed.filterNot(folded).map(t => ivfDeltaPathToken(indexDir, t)), gen,
-      quantized = json.contains("\"sq8\":true"))
-  }
+  def ivfLoad(indexDir: String): IvfIndex =
+    indexAt(indexDir, TableLog.snapshot(indexDir))
 
-  // --- delta layout (streaming epochs AND batch appends) -------------
-  // root/delta/<token>/cell=<c>/...    delta rows; token is epoch-<id>
-  //                                    (StreamingIndex) or append-<n>
-  //                                    (ivfAppend)
-  // root/_delta_manifest/<token>.json  the atomic commit point
-  // root/generation.json               base-generation pointer + the
-  //                                    tokens already folded into it
+  /** The index as of snapshot `s`. */
+  private[graft] def indexAt(root: String, s: TableLog.Snapshot): IvfIndex = {
+    require(s.version >= 0, s"no committed IVF index at $root")
+    val c = TableLog.fromJson[CentroidFile](
+      Files.readString(Paths.get(root, s.info("centroids"))))
+    IvfIndex(root, c.idCol, c.vecCol, c.centroids,
+      s.paths.filter(_.startsWith("delta/")).map(p => s"$root/$p"), genOf(s),
+      quantized = c.sq8)
+  }
 
   def ivfDeltaPath(indexDir: String, epoch: Long): String =
     ivfDeltaPathToken(indexDir, s"epoch-$epoch")
 
   def ivfDeltaPathToken(indexDir: String, token: String): String =
     s"$indexDir/delta/$token"
-
-  def ivfDeltaManifest(indexDir: String, epoch: Long): java.nio.file.Path =
-    ivfDeltaManifestToken(indexDir, s"epoch-$epoch")
-
-  def ivfDeltaManifestToken(
-      indexDir: String, token: String): java.nio.file.Path =
-    java.nio.file.Paths.get(indexDir, "_delta_manifest", s"$token.json")
-
-  /** Every manifest-listed delta token, sorted (epochs first, then
-    * appends, numerically within each kind — a deterministic union
-    * order for [[readCells]]).
-    */
-  private[graft] def ivfManifestTokens(indexDir: String): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val mDir = java.nio.file.Paths.get(indexDir, "_delta_manifest")
-    if (!java.nio.file.Files.isDirectory(mDir)) Nil
-    else {
-      val s = java.nio.file.Files.list(mDir)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case n if n.matches("(epoch|append)-\\d+\\.json") =>
-          n.stripSuffix(".json") }
-        .toSeq
-        .sortBy { t =>
-          val Array(kind, num) = t.split("-", 2)
-          (if (kind == "epoch") 0 else 1, num.toLong)
-        }
-      finally s.close()
-    }
-  }
-
-  /** Delta tokens any reader may see: committed (manifest present) and
-    * NOT folded into the current base generation. The folded exclusion
-    * closes the compaction crash window — if a crash lands between the
-    * generation swap and manifest retirement, the lingering manifests
-    * are ignored rather than double-counted (advisor, round 6).
-    */
-  def ivfCommittedDeltaTokens(indexDir: String): Seq[String] = {
-    // same listing-before-pointer order as ivfLoad (see its comment)
-    val listed = ivfManifestTokens(indexDir)
-    val (_, folded) = ivfReadGeneration(indexDir)
-    listed.filterNot(folded)
-  }
-
-  /** Streaming-epoch ids among the live committed deltas. */
-  def ivfCommittedDeltaEpochs(indexDir: String): Seq[Long] =
-    ivfCommittedDeltaTokens(indexDir)
-      .collect { case t if t.startsWith("epoch-") =>
-        t.stripPrefix("epoch-").toLong }
-
-  /** Read the generation pointer: (generation, folded tokens).
-    * (0, empty) when absent — the fresh-build layout.
-    */
-  def ivfReadGeneration(indexDir: String): (Int, Set[String]) = {
-    val (gen, folded, _) = ivfReadGenerationFull(indexDir)
-    (gen, folded)
-  }
-
-  /** Full pointer: (generation, folded tokens, maxFoldedEpoch).
-    * `maxFoldedEpoch` is the highest STREAMING epoch id ever folded
-    * into any base generation — monotone, never pruned (one long, not
-    * a growing list). It outlives the folded list so that a crashed
-    * epoch replay arriving after compaction retired the manifest AND
-    * [[graft.pipeline.StreamingIndex.vacuum]] pruned the folded entry
-    * still cannot re-commit rows the base already holds. Consistent
-    * with the manifest convention's standing contract: one streaming
-    * checkpoint lineage per index dir (epoch ids are the dedup key).
-    */
-  def ivfReadGenerationFull(indexDir: String): (Int, Set[String], Long) = {
-    val p = java.nio.file.Paths.get(indexDir, "generation.json")
-    if (!java.nio.file.Files.exists(p)) (0, Set.empty, -1L)
-    else {
-      val json = java.nio.file.Files.readString(p)
-      val gen = "\"gen\":(\\d+)".r.findFirstMatchIn(json)
-        .map(_.group(1).toInt).getOrElse(0)
-      val folded = "\"((?:epoch|append)-\\d+)\"".r.findAllMatchIn(json)
-        .map(_.group(1)).toSet
-      val maxEpoch = "\"maxFoldedEpoch\":(-?\\d+)".r.findFirstMatchIn(json)
-        .map(_.group(1).toLong).getOrElse(-1L)
-      (gen, folded, maxEpoch)
-    }
-  }
-
-  /** Atomically swap the generation pointer (tmp + rename — the
-    * manifest convention). This single rename is the ONLY commit point
-    * of a compaction: a reader loads either the old generation with
-    * its deltas or the new generation without them, never a mix.
-    */
-  def ivfWriteGeneration(
-      indexDir: String, gen: Int, folded: Set[String],
-      maxFoldedEpoch: Long = -1L): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val json = s"""{"gen":$gen,"maxFoldedEpoch":$maxFoldedEpoch,"folded":[""" +
-      folded.toSeq.sorted.map("\"" + _ + "\"").mkString(",") + "]}"
-    val tmp = Paths.get(indexDir, ".generation.json.tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, Paths.get(indexDir, "generation.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
 
   /** Per-cell populations of a built index — the balance report a
     * deployment checks before trusting nprobe recall (one hot cell =
@@ -648,45 +515,21 @@ object SimilarityOps {
       case i  => i + 1
     }
 
-  /** Content tag of the index as a reader sees it right now: centroid
-    * matrix + base generation + live committed delta tokens. Any
-    * append (new token), compaction (generation bump), or rebuild
-    * (new centroids) changes the tag — the staleness fence for the
-    * persisted recall curve. Conservative on compaction: folding
-    * preserves answers, so a re-measure there is wasted-but-safe (the
-    * alternative — proving content equality across the fold — buys
-    * one corpus pass per compaction and a subtle invariant; not worth
-    * it).
-    */
-  private def ivfStateTag(indexDir: String): String = {
-    val cents = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(indexDir, "centroids.json"))
-    val (gen, folded, _) = ivfReadGenerationFull(indexDir)
-    val tokens = ivfManifestTokens(indexDir).filterNot(folded)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(s"$gen|${tokens.mkString(",")}|$cents".getBytes("UTF-8"))
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  /** Persist a measured curve beside the centroids (recall.json, tmp +
-    * atomic rename — the manifest convention) so a query-only session
-    * tunes nprobe without re-measuring. The record carries the index's
-    * content tag ([[ivfStateTag]]); readers treat a tag mismatch as
-    * no-curve, so a curve measured before an append, compaction, or
-    * rebuild can never silently tune the grown index.
+  /** Persist a measured curve beside the centroids (`recall.json`,
+    * replaced atomically) so a query-only session tunes nprobe without
+    * re-measuring. The record carries the index's log version as its
+    * state tag; readers treat a mismatch as no-curve, so a curve
+    * measured before an append, compaction or rebuild (each a new
+    * commit) can never silently tune the changed index.
     */
   def ivfWriteRecall(
       indexDir: String, k: Int, numQueries: Long, hits: Seq[Long],
-      sampleTag: String = ""): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val json = s"""{"k":$k,"queries":$numQueries,""" +
-      s""""state":"${ivfStateTag(indexDir)}","sample":"$sampleTag",""" +
-      s""""hits":[""" + hits.mkString(",") + "]}"
-    val tmp = Paths.get(indexDir, ".recall.json.tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, Paths.get(indexDir, "recall.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+      sampleTag: String = ""): Unit =
+    TableLog.replace(Paths.get(indexDir, "recall.json"), TableLog.toJson(RecallCurve(
+      k, numQueries, TableLog.snapshot(indexDir).version.toString, sampleTag, hits)))
+
+  private final case class RecallCurve(
+      k: Int, queries: Long, state: String, sample: String, hits: Seq[Long])
 
   /** Identity tag of a query sample: md5 over the SORTED distinct id
     * set. Persisted beside the curve so a different sample of the same
@@ -710,37 +553,21 @@ object SimilarityOps {
   }
 
   /** Read a persisted curve: (k, queries, cumulative hits). None when
-    * absent OR when the index content changed since the measurement
-    * (state-tag mismatch — see [[ivfStateTag]]).
+    * absent, unreadable, OR when the index changed since the
+    * measurement (log version mismatch — see [[ivfWriteRecall]]).
     */
   def ivfReadRecall(indexDir: String): Option[(Int, Long, Seq[Long])] =
     ivfReadRecallFull(indexDir).map { case (k, q, h, _) => (k, q, h) }
 
-  /** [[ivfReadRecall]] plus the persisted sample tag (empty when the
-    * record predates the tag).
-    */
+  /** [[ivfReadRecall]] plus the persisted sample tag. */
   def ivfReadRecallFull(
       indexDir: String): Option[(Int, Long, Seq[Long], String)] = {
-    val p = java.nio.file.Paths.get(indexDir, "recall.json")
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val json = java.nio.file.Files.readString(p)
-      val state = "\"state\":\"([0-9a-f]+)\"".r.findFirstMatchIn(json)
-        .map(_.group(1))
-      if (!state.contains(ivfStateTag(indexDir))) None
-      else {
-        def num(name: String): Long =
-          ("\"" + name + "\":(\\d+)").r.findFirstMatchIn(json)
-            .map(_.group(1).toLong)
-            .getOrElse(sys.error(s"bad recall.json: no $name"))
-        val sample = "\"sample\":\"([0-9a-f]*)\"".r.findFirstMatchIn(json)
-          .map(_.group(1)).getOrElse("")
-        val hits = "\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-          .map(_.group(1)).filter(_.nonEmpty)
-          .map(_.split(",").map(_.trim.toLong).toSeq).getOrElse(Nil)
-        Some((num("k").toInt, num("queries"), hits, sample))
-      }
-    }
+    val p = Paths.get(indexDir, "recall.json")
+    Option.when(Files.exists(p))(p)
+      .flatMap(p => scala.util.Try(
+        TableLog.fromJson[RecallCurve](Files.readString(p))).toOption)
+      .filter(_.state == TableLog.snapshot(indexDir).version.toString)
+      .map(c => (c.k, c.queries, c.hits, c.sample))
   }
 
   /** Recall-targeted batch serving: measure the curve on `sample`
@@ -949,19 +776,9 @@ object SimilarityOps {
       readCells(spark, index).filter(col(index.idCol) === queryId),
       index.idCol, index.vecCol, k, nprobe).drop("query_id")
 
-  /** Best-effort recursive delete (index dirs: the registered
-    * queries' cache, [[graft.pipeline.StreamingIndex.vacuum]]).
-    */
-  private[graft] def deleteRecursively(dir: String): Unit = {
-    val root = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.isDirectory(root)) {
-      import scala.jdk.CollectionConverters._
-      val all = java.nio.file.Files.walk(root)
-      try all.iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      finally all.close()
-    }
-  }
+  /** Recursive delete of an index dir (the registered queries' cache). */
+  private[graft] def deleteRecursively(dir: String): Unit =
+    TableLog.deleteRecursively(Paths.get(dir))
 
   /** Batch embedding near-dup pairs, LSH-bucketed — the scale shape
     * for corpus-wide near-dup removal. Candidate pairs collide on the

@@ -1,25 +1,25 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
-/** Idempotent chunked commits + lineage manifest — the engine's
-  * Iceberg-semantics stand-in (no Iceberg runtime jar exists in this
-  * environment, SURVEY.md env facts; snapshots/commits are emulated
-  * over Parquet + an atomic manifest convention we own).
+/** Idempotent chunked commits + lineage — the engine's
+  * Iceberg-semantics stand-in over Parquet and the [[TableLog]] commit
+  * log (no Iceberg runtime jar exists in this environment, SURVEY.md
+  * env facts).
   *
   * The input is deterministically split into `chunks` by
   * pmod(xxhash64(doc_id), chunks). Each chunk is extracted and written
-  * to `out/data/chunk=<k>/`, then a manifest record is written via
-  * tmp-file + atomic rename to `out/_manifest/chunk-<k>.json`. A killed
-  * run resumes by skipping manifested chunks — the cache-hit
-  * anti-join semantics of the reference's Redis memoization (reference
-  * app/utils/ocr_engine.py:123-135; SURVEY.md J3) at commit granularity:
-  * input LEFT ANTI JOIN committed ON chunk(doc_id).
+  * to `out/data/chunk=<k>/`, then ONE log commit adds that directory
+  * with its lineage record. A killed run resumes by skipping committed
+  * chunks — the cache-hit anti-join semantics of the reference's Redis
+  * memoization (reference app/utils/ocr_engine.py:123-135; SURVEY.md
+  * J3) at commit granularity: input LEFT ANTI JOIN committed ON
+  * chunk(doc_id).
   *
-  * Each manifest line carries lineage: run id, source snapshot, chunk,
+  * Each lineage record carries run id, source snapshot, chunk,
   * row/span/error counts, wall time (north rule: per-partition lineage
   * + metrics).
   */
@@ -45,33 +45,21 @@ object Commit {
       committed: Seq[ChunkManifest],
       skipped: Seq[Int])
 
-  def manifestDir(outDir: String): Path = Paths.get(outDir, "_manifest")
+  /** Chunks already committed (resume set), from the log. */
+  def committedChunks(outDir: String): Map[Int, ChunkManifest] =
+    chunksOf(TableLog.snapshot(outDir))
 
-  /** Files.list with the directory stream CLOSED (a bare
-    * `Files.list(...).iterator()` leaks one fd per call until GC —
-    * reviewer finding; a long-lived driver staging/polling in a loop
-    * can crawl toward the fd ulimit).
-    */
-  private def listDir(dir: Path): Seq[Path] = {
-    if (!Files.isDirectory(dir)) return Nil
-    val s = Files.list(dir)
-    try s.iterator().asScala.toSeq finally s.close()
-  }
+  private def chunksOf(s: TableLog.Snapshot): Map[Int, ChunkManifest] =
+    s.live.collect { case e if e.path.startsWith("data/chunk=") =>
+      val m = manifestOf(e.info); m.chunk -> m }.toMap
 
-  /** Files.walk, deepest-first, stream closed (see [[listDir]]). */
-  private def walkDeepestFirst(dir: Path): Seq[Path] = {
-    val s = Files.walk(dir)
-    try s.iterator().asScala.toSeq.reverse finally s.close()
-  }
+  private def lineage(m: ChunkManifest): Map[String, String] =
+    m.productElementNames.zip(m.productIterator.map(_.toString)).toMap
 
-  /** Chunks already committed (resume set). */
-  def committedChunks(outDir: String): Map[Int, ChunkManifest] = {
-    listDir(manifestDir(outDir))
-      .filter(_.getFileName.toString.matches("chunk-\\d+\\.json"))
-      .flatMap(p => parseManifest(Files.readString(p)))
-      .map(m => m.chunk -> m)
-      .toMap
-  }
+  private def manifestOf(i: Map[String, String]): ChunkManifest =
+    ChunkManifest(i("runId"), i("chunk").toInt, i("sourceSnapshot"),
+      i("rowCount").toLong, i("spanCount").toLong, i("errorCount").toLong,
+      i("wallMillis").toLong, i("mismatchCount").toLong)
 
   /** Stage the input partitioned by the chunk key — the
     * Iceberg-partitioned-table stand-in. Without this, every chunk
@@ -94,7 +82,7 @@ object Commit {
     * restages exactly the chunk it hashes into; every other chunk's
     * directories are untouched — the reference's per-document cache
     * semantics (ocr_engine.py:123-135) at chunk grain, matching the
-    * granularity the commit manifests already resume at. Writes go
+    * granularity the chunk commits already resume at. Writes go
     * through dynamic partition overwrite so only dirty partitions are
     * replaced; chunks that vanished from the input are deleted.
     * Crash-safe: a dirty chunk's sentinel is removed BEFORE its
@@ -218,14 +206,12 @@ object Commit {
     }
     def sentinelPath(k: Long) = sentDir.resolve(s"chunk-$k")
     val live = docSums.keySet
-    val sentineled = listDir(sentDir)
+    val sentineled = TableLog.list(sentDir)
       .map(_.getFileName.toString)
       .collect { case s if s.matches("chunk-\\d+") => s.drop(6).toLong }
       .toSet
     def chunkDirs(k: Long) =
       Seq(stagedRoot.resolve(s"docs/chunk=$k"), stagedRoot.resolve(s"media/chunk=$k"))
-    def deleteDir(p: Path): Unit =
-      if (Files.isDirectory(p)) walkDeepestFirst(p).foreach(Files.delete)
     val dirty = live.filter { k =>
       !(Files.exists(sentinelPath(k)) &&
         Files.readString(sentinelPath(k)) == fingerprint(k))
@@ -237,19 +223,19 @@ object Commit {
     // chunks staged before (sentinel or leftover dir) but gone from
     // the input: remove, or a pruned read would resurrect stale docs
     val dirIds = Seq("docs", "media").flatMap { t =>
-      listDir(stagedRoot.resolve(t)).map(_.getFileName.toString)
+      TableLog.list(stagedRoot.resolve(t)).map(_.getFileName.toString)
         .collect { case s if s.matches("chunk=\\d+") => s.drop(6).toLong }
     }.toSet
     ((sentineled ++ dirIds) -- live).foreach { k =>
       Files.deleteIfExists(sentinelPath(k))
-      chunkDirs(k).foreach(deleteDir)
+      chunkDirs(k).foreach(TableLog.deleteRecursively)
     }
     if (dirty.nonEmpty) {
       // invalidate first (crash ⇒ still dirty), clear the partitions,
       // then rewrite ONLY the dirty partitions (dynamic overwrite)
       dirty.foreach { k =>
         Files.deleteIfExists(sentinelPath(k))
-        chunkDirs(k).foreach(deleteDir)
+        chunkDirs(k).foreach(TableLog.deleteRecursively)
       }
       docs.withColumn("chunk", chunkOf)
         .filter(col("chunk").isin(dirty: _*))
@@ -266,18 +252,10 @@ object Commit {
         .partitionBy("chunk")
         .option("parquet.block.size", s"${4 << 20}")
         .parquet(s"$stagedRoot/media")
-      dirty.foreach { k =>
-        val tmp = sentDir.resolve(s".chunk-$k.tmp")
-        Files.writeString(tmp, fingerprint(k))
-        Files.move(tmp, sentinelPath(k),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      }
+      dirty.foreach(k => TableLog.replace(sentinelPath(k), fingerprint(k)))
     }
     // all sentinels now reflect THIS input — arm the fast path
-    val tmp = stagedRoot.resolve("._input_snapshot.tmp")
-    Files.writeString(tmp, inputSnap)
-    Files.move(tmp, snapFile,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    TableLog.replace(snapFile, inputSnap)
   }
 
   /** A4 — progress % (reference models.py ProcessingStatus.progress ∈
@@ -307,30 +285,25 @@ object Commit {
       else math.min(100.0, done.get * 100.0 / total.get)
   }
 
-  /** Chunk-granularity progress record, written atomically to
-    * `_manifest/progress.json` after every chunk commit — a resumable
+  /** Chunk-granularity progress record, replaced atomically at
+    * `out/progress.json` after every chunk commit — a resumable
     * run's poll surface (the reference polls task progress %,
     * main.py:311-317; here the unit is the chunk, the same grain the
-    * lineage manifests use).
+    * lineage records use).
     */
   def writeProgress(outDir: String, runId: String, done: Int, total: Int): Unit = {
-    val pct = if (total == 0) 100.0 else done * 100.0 / total
-    val json =
-      s"""{"runId":"$runId","chunksDone":$done,"chunksTotal":$total,""" +
-        f""""percent":$pct%.1f}"""
-    val dir = manifestDir(outDir)
-    val tmp = dir.resolve(".progress.json.tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, dir.resolve("progress.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val pct = if (total == 0) 100.0 else math.round(done * 1000.0 / total) / 10.0
+    Files.createDirectories(Paths.get(outDir))
+    TableLog.replace(Paths.get(outDir, "progress.json"),
+      TableLog.toJson(Progress(runId, done, total, pct)))
   }
 
-  def readProgress(outDir: String): Option[Double] = {
-    val p = manifestDir(outDir).resolve("progress.json")
-    if (!Files.exists(p)) None
-    else """"percent":([0-9.]+)""".r.findFirstMatchIn(Files.readString(p))
-      .map(_.group(1).toDouble)
-  }
+  private final case class Progress(
+      runId: String, chunksDone: Int, chunksTotal: Int, percent: Double)
+
+  def readProgress(outDir: String): Option[Double] =
+    Some(Paths.get(outDir, "progress.json")).filter(Files.exists(_))
+      .map(p => TableLog.fromJson[Progress](Files.readString(p)).percent)
 
   /** Handle to a bucketed staging layout (see [[stageBucketed]]). */
   final case class BucketedStage(
@@ -404,7 +377,7 @@ object Commit {
     val sentinel = root.resolve(s"_${name}_complete")
     val sentinelFresh = Files.exists(sentinel) &&
       Files.readString(sentinel) == fingerprint
-    def hasDataFiles = dataDir.forall(d => listDir(d).exists { p =>
+    def hasDataFiles = dataDir.forall(d => TableLog.list(d).exists { p =>
       val n = p.getFileName.toString
       !n.startsWith("_") && !n.startsWith(".")
     })
@@ -414,10 +387,7 @@ object Commit {
     else {
       Files.deleteIfExists(sentinel)
       rewrite()
-      val tmp = root.resolve(s"._${name}_complete.tmp")
-      Files.writeString(tmp, fingerprint)
-      Files.move(tmp, sentinel,
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      TableLog.replace(sentinel, fingerprint)
     }
   }
 
@@ -524,10 +494,7 @@ object Commit {
       inlineTasks.write.mode("overwrite").parquet(s"$root/inline")
     }
     // every component fresh under THIS input — arm the fast path
-    val snapTmp = root.resolve("._input_snapshot.tmp")
-    Files.writeString(snapTmp, inputSnap)
-    Files.move(snapTmp, snapFile,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    TableLog.replace(snapFile, inputSnap)
     BucketedStage(tasksTbl, mediaTbl, s"$root/inline", buckets)
   }
 
@@ -570,10 +537,7 @@ object Commit {
       dataDir = Some(root.resolve("media"))) { () =>
       writeBucketedMedia(spark, mediaClean, s"$root/media", tbl, buckets)
     }
-    val snapTmp = root.resolve("._input_snapshot.tmp")
-    Files.writeString(snapTmp, inputSnap)
-    Files.move(snapTmp, snapFile,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    TableLog.replace(snapFile, inputSnap)
     tbl
   }
 
@@ -601,7 +565,6 @@ object Commit {
       expected: Option[DataFrame] = None,
       bucketedJoin: Boolean = false): RunSummary = {
     require(chunks > 0)
-    Files.createDirectories(manifestDir(outDir))
     val sourceSnapshot = snapshotId(docs)
     val already = committedChunks(outDir)
     val (stagedDocs, stagedMedia) =
@@ -654,7 +617,10 @@ object Commit {
         val m = ChunkManifest(runId, k, sourceSnapshot,
           stats.getLong(0), stats.getLong(1), stats.getLong(2),
           (System.nanoTime() - t0) / 1000000L, mismatches)
-        writeManifest(outDir, m)
+        // THE commit point; a concurrent run that committed chunk k
+        // first wrote the same deterministic output, so losing is fine
+        TableLog.commit(outDir)(s => Option.when(!chunksOf(s).contains(k))(
+          TableLog.Record(Seq(TableLog.Entry(s"data/chunk=$k", lineage(m))))))
         // the chunk is committed — reclaim its bucketed staging
         // (catalog tables + dir); resume skips committed chunks, so
         // nothing will ever read it again (reviewer finding: the
@@ -662,8 +628,7 @@ object Commit {
         stageOpt.foreach { stage =>
           spark.sql(s"DROP TABLE IF EXISTS ${stage.tasksTable}")
           spark.sql(s"DROP TABLE IF EXISTS ${stage.mediaTable}")
-          val d = Paths.get(s"$outDir/_chunk_stage/chunk=$k")
-          if (Files.isDirectory(d)) walkDeepestFirst(d).foreach(Files.delete)
+          TableLog.deleteRecursively(Paths.get(s"$outDir/_chunk_stage/chunk=$k"))
         }
         committed += m
         done += 1
@@ -673,61 +638,71 @@ object Commit {
     RunSummary(committed.toSeq, already.keys.toSeq.sorted)
   }
 
-  /** Read the committed output table (all chunks). */
+  /** Read the committed output table: the chunk directories of the
+    * current snapshot only — a chunk written but never committed is
+    * invisible.
+    */
   def readOutput(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/data")
+    readCommitted(spark, s"$outDir/data",
+      TableLog.snapshot(outDir).paths.filter(_.startsWith("data/chunk="))
+        .map(p => s"$outDir/$p"), "chunk", IntegerType)
+
+  /** The committed partition dirs `dirs` of a doc table under `base`,
+    * with partition column `part` as `partType`; with none committed, an
+    * empty frame of the same schema (the data dir may hold only an
+    * uncommitted partial, or not exist at all).
+    */
+  private[pipeline] def readCommitted(
+      spark: SparkSession, base: String, dirs: Seq[String],
+      part: String, partType: DataType): DataFrame =
+    if (dirs.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(
+        Encoders.product[graft.model.Doc].schema.fields :+ StructField(part, partType)))
+    else
+      spark.read.option("basePath", base).parquet(dirs: _*)
+        .withColumn(part, col(part).cast(partType))
 
   // -------------------------------------------------------------------
   // S12 — maintenance (temp-file GC twin, reference
   // app/utils/maintenance.py:13-58): vacuum orphaned data dirs from
-  // aborted writes, compact chunk manifests into a snapshot summary.
+  // aborted writes, compact the log into a checkpoint.
   // -------------------------------------------------------------------
 
-  /** Delete `data/chunk=k` directories that have NO manifest entry —
-    * leftovers of a write that died before its commit record. Returns
-    * the vacuumed chunk ids. Never touches manifested chunks.
+  /** Delete `data/chunk=k` directories the snapshot does not hold —
+    * leftovers of a write that died before its commit. Returns the
+    * vacuumed chunk ids. Never touches committed chunks.
     */
   def vacuum(outDir: String): Seq[Int] = {
-    val dataDir = Paths.get(outDir, "data")
-    if (!Files.isDirectory(dataDir)) return Nil
-    val committed = committedChunks(outDir).keySet
-    val orphans = listDir(dataDir)
-      .filter(p => p.getFileName.toString.matches("chunk=\\d+"))
-      .filter(p => !committed.contains(p.getFileName.toString.drop(6).toInt))
-    orphans.foreach(dir => walkDeepestFirst(dir).foreach(Files.delete))
-    orphans.map(_.getFileName.toString.drop(6).toInt).sorted
+    val live = TableLog.snapshot(outDir).paths.toSet
+    TableLog.deleteAll(outDir,
+      TableLog.list(Paths.get(outDir, "data")).map(p => s"data/${p.getFileName}")
+        .filter(p => p.matches("data/chunk=\\d+") && !live(p)))
+      .map(_.stripPrefix("data/chunk=").toInt).sorted
   }
 
-  /** Write `_manifest/snapshot.json` aggregating all chunk manifests —
-    * the Iceberg-snapshot stand-in a downstream reader checks instead
-    * of N chunk files.
+  /** Commit a checkpoint: the live chunks with their lineage, plus the
+    * aggregate of all chunk lineage records in its info — the
+    * Iceberg-snapshot stand-in a reader replays instead of N commits.
     */
-  def compact(outDir: String): ChunkManifest = {
-    val all = committedChunks(outDir).values.toSeq.sortBy(_.chunk)
-    require(all.nonEmpty, "nothing committed")
-    val total = ChunkManifest(
-      runId = all.map(_.runId).distinct.mkString("+"),
-      chunk = -1,
-      sourceSnapshot = all.map(_.sourceSnapshot).distinct.mkString("+"),
-      rowCount = all.map(_.rowCount).sum,
-      spanCount = all.map(_.spanCount).sum,
-      errorCount = all.map(_.errorCount).sum,
-      wallMillis = all.map(_.wallMillis).sum,
-      mismatchCount = all.map(_.mismatchCount).sum)
-    val json =
-      s"""{"runId":"${total.runId}","chunks":${all.length},""" +
-        s""""sourceSnapshot":"${total.sourceSnapshot}","rowCount":${total.rowCount},""" +
-        s""""spanCount":${total.spanCount},"errorCount":${total.errorCount},""" +
-        s""""mismatchCount":${total.mismatchCount},"wallMillis":${total.wallMillis}}"""
-    val tmp = manifestDir(outDir).resolve(".snapshot.json.tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, manifestDir(outDir).resolve("snapshot.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    total
-  }
+  def compact(outDir: String): ChunkManifest =
+    manifestOf(TableLog.commit(outDir) { s =>
+      val all = chunksOf(s).values.toSeq.sortBy(_.chunk)
+      require(all.nonEmpty, "nothing committed")
+      val total = ChunkManifest(
+        runId = all.map(_.runId).distinct.mkString("+"),
+        chunk = -1,
+        sourceSnapshot = all.map(_.sourceSnapshot).distinct.mkString("+"),
+        rowCount = all.map(_.rowCount).sum,
+        spanCount = all.map(_.spanCount).sum,
+        errorCount = all.map(_.errorCount).sum,
+        wallMillis = all.map(_.wallMillis).sum,
+        mismatchCount = all.map(_.mismatchCount).sum)
+      Some(TableLog.Record(s.live,
+        info = lineage(total) + ("chunks" -> all.length.toString), checkpoint = true))
+    }.get.info)
 
   /** Source snapshot id: stable fingerprint of the input's files/shape —
-    * recorded in lineage so a manifest can be traced to its input.
+    * recorded in lineage so a chunk commit can be traced to its input.
     *
     * Each file contributes path + length + modificationTime (advisor,
     * round 5): the path set alone misses a file rewritten IN PLACE
@@ -763,44 +738,5 @@ object Commit {
       }
     }
     h.digest().map("%02x".format(_)).mkString.take(16)
-  }
-
-  private def writeManifest(outDir: String, m: ChunkManifest): Unit = {
-    val json =
-      s"""{"runId":"${m.runId}","chunk":${m.chunk},"sourceSnapshot":"${m.sourceSnapshot}",""" +
-        s""""rowCount":${m.rowCount},"spanCount":${m.spanCount},""" +
-        s""""errorCount":${m.errorCount},"mismatchCount":${m.mismatchCount},""" +
-        s""""wallMillis":${m.wallMillis}}"""
-    val dir = manifestDir(outDir)
-    val tmp = dir.resolve(s".chunk-${m.chunk}.json.tmp")
-    Files.writeString(tmp, json)
-    // Single-writer is the contract (as in Iceberg, where optimistic
-    // manifest locking enforces it); if a concurrent run races us to
-    // the same chunk anyway, losing the rename is NON-FATAL — the
-    // winner committed the same deterministic output, so discard our
-    // tmp record instead of dying after the data write. (The data-dir
-    // write itself is not multi-writer-safe: don't run two
-    // uncoordinated writers against one outDir.)
-    try Files.move(tmp, dir.resolve(s"chunk-${m.chunk}.json"),
-      StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-    }
-  }
-
-  // mismatchCount group optional: manifests written before round 4
-  // lack the field and must keep parsing (read as 0)
-  private val manifestPattern =
-    ("""\{"runId":"([^"]*)","chunk":(\d+),"sourceSnapshot":"([^"]*)",""" +
-      """"rowCount":(\d+),"spanCount":(\d+),"errorCount":(\d+),""" +
-      """(?:"mismatchCount":(\d+),)?"wallMillis":(\d+)\}""").r
-
-  def parseManifest(json: String): Option[ChunkManifest] = json.trim match {
-    case manifestPattern(runId, chunk, snap, rows, spans, errs, mism, wall) =>
-      Some(ChunkManifest(runId, chunk.toInt, snap, rows.toLong, spans.toLong,
-        errs.toLong, wall.toLong,
-        Option(mism).map(_.toLong).getOrElse(0L)))
-    case _ => None
   }
 }

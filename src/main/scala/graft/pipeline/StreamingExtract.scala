@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -13,9 +12,9 @@ import graft.ops.DedupOps
   * dataflow (spanTasks → media join → kernel → reassemble) via
   * `foreachBatch`, against the static media sidecar (stream-static
   * join). Each micro-batch commits idempotently by epoch — parquet to
-  * `out/data/epoch=<id>/`, then an atomic tmp+rename manifest exactly
-  * like [[Commit]] — so the at-least-once `foreachBatch` replay after
-  * a crash skips an already-committed epoch: effectively-once output,
+  * `out/data/epoch=<id>/`, then one [[TableLog]] commit exactly like
+  * [[Commit]]'s — so the at-least-once `foreachBatch` replay after a
+  * crash skips an already-committed epoch: effectively-once output,
   * resumable from the checkpoint (north rule: resumable with
   * per-partition lineage, extended to arrival time).
   */
@@ -70,7 +69,7 @@ object StreamingExtract {
     * batch operators (q33) over the committed output; the guard's job
     * is stopping bursts of near-identical docs from all committing.
     * Accepted fingerprints persist to
-    * `out/_hashes/epoch=<id>` under the SAME manifest commit point as
+    * `out/_hashes/epoch=<id>` under the SAME log commit as
     * the data, so replays neither lose nor double-count hashes, and a
     * crashed epoch's hashes are invisible (committed-epochs-only, like
     * [[readOutput]]). Defaults mirror the image family's pigeonhole
@@ -106,15 +105,13 @@ object StreamingExtract {
     val reader = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(docsDir)
-    Files.createDirectories(Paths.get(outDir, "_manifest"))
     // one-time static-side staging, BEFORE the stream starts
     val mediaTable = bucketedMediaBuckets.map(b =>
       Commit.stageMediaBucketed(spark, media, outDir, b))
     val q = reader.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val manifest = Paths.get(outDir, "_manifest", s"epoch-$epochId.json")
-        if (!Files.exists(manifest)) { // replayed epoch → already committed
+        TableLog.commitEpoch(outDir, epochId) {
           val accepted =
             if (!dedupGuard) batch
             else {
@@ -161,35 +158,13 @@ object StreamingExtract {
             accepted.select(col("_fp").as("fp")).distinct()
               .write.mode("overwrite")
               .parquet(s"$outDir/_hashes/epoch=$epochId")
-          val rows = spark.read.parquet(s"$outDir/data/epoch=$epochId").count()
-          val tmp = Paths.get(outDir, "_manifest", s".epoch-$epochId.json.tmp")
-          Files.writeString(tmp, s"""{"epoch":$epochId,"rowCount":$rows}""")
-          Files.move(tmp, manifest,
-            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+          Seq(s"data/epoch=$epochId", s"_hashes/epoch=$epochId")
+            .take(if (dedupGuard) 2 else 1).map(TableLog.Entry(_))
         }
-        (): Unit
       }
       .trigger(if (continuous) Trigger.ProcessingTime(0) else Trigger.AvailableNow())
       .start()
     q
-  }
-
-  /** Epoch ids with a committed manifest — the only epochs any reader
-    * may see (advisor, round 4).
-    */
-  private def committedEpochList(outDir: String): Seq[Long] = {
-    import scala.jdk.CollectionConverters._
-    val mDir = Paths.get(outDir, "_manifest")
-    if (!Files.isDirectory(mDir)) Nil
-    else {
-      val s = Files.list(mDir)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case n if n.matches("epoch-\\d+\\.json") =>
-          n.stripPrefix("epoch-").stripSuffix(".json").toLong }
-        .toSeq.sorted
-      finally s.close()
-    }
   }
 
   /** The dedup guard's committed fingerprint table: the union of every
@@ -198,9 +173,8 @@ object StreamingExtract {
     * membership set, not a multiset.
     */
   def readCommittedHashes(spark: SparkSession, outDir: String): DataFrame = {
-    val dirs = committedEpochList(outDir)
-      .map(e => s"$outDir/_hashes/epoch=$e")
-      .filter(p => Files.isDirectory(Paths.get(p)))
+    val dirs = TableLog.snapshot(outDir).paths.filter(_.startsWith("_hashes/"))
+      .map(p => s"$outDir/$p")
     if (dirs.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -212,31 +186,15 @@ object StreamingExtract {
 
   /** Read the committed streaming output — COMMITTED epochs only,
     * mirroring [[Commit.readOutput]]'s committed-only contract: an
-    * epoch directory written but never manifest-renamed (crash between
-    * the parquet write and the manifest move) is invisible to readers
-    * until the replay overwrites and commits it (advisor, round 4).
+    * epoch directory written but never committed (crash between the
+    * parquet write and the log commit) is invisible to readers until
+    * the replay overwrites and commits it (advisor, round 4). The
+    * `epoch` column is a long on both the empty and the committed
+    * branch.
     */
-  def readOutput(spark: SparkSession, outDir: String): DataFrame = {
-    val epochs = committedEpochList(outDir)
-    if (epochs.isEmpty)
-      // no committed epoch: a statically-typed empty frame — the data
-      // dir may hold only an uncommitted partial, or not exist at all,
-      // so reading it for a schema could throw (reviewer finding).
-      // Schema INCLUDES the epoch partition column the committed branch
-      // gains from basePath discovery (advisor, round 5): both branches
-      // must return (doc fields..., epoch) or a consumer unioning
-      // outputs / reading positionally breaks on the empty case.
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          org.apache.spark.sql.Encoders.product[graft.model.Doc].schema.fields :+
-            org.apache.spark.sql.types.StructField(
-              "epoch", org.apache.spark.sql.types.LongType)))
-    else
-      // partition discovery infers epoch as INT for small values — cast
-      // to long so the schema matches the empty branch exactly
-      spark.read.option("basePath", s"$outDir/data")
-        .parquet(epochs.map(e => s"$outDir/data/epoch=$e"): _*)
-        .withColumn("epoch", col("epoch").cast("long"))
-  }
+  def readOutput(spark: SparkSession, outDir: String): DataFrame =
+    Commit.readCommitted(spark, s"$outDir/data",
+      TableLog.snapshot(outDir).paths.filter(_.startsWith("data/epoch="))
+        .map(p => s"$outDir/$p"), "epoch",
+      org.apache.spark.sql.types.LongType)
 }

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -12,7 +11,7 @@ import graft.ops.SimilarityOps
   * centroid matrix (the exact argmax the build used, so
   * stream-then-query ≡ rebuild-over-the-union) and committed as
   * per-epoch DELTA tables beside the base cells — the same
-  * cell-partitioned layout, the same atomic tmp+rename manifest as
+  * cell-partitioned layout, one [[TableLog]] commit per epoch as in
   * [[StreamingExtract]], so the at-least-once `foreachBatch` replay
   * after a crash skips an already-committed epoch and an epoch
   * written-but-not-committed stays invisible to every reader:
@@ -22,11 +21,10 @@ import graft.ops.SimilarityOps
   * committed deltas, and every query reads base ∪ deltas with the
   * `cell` filter partition-pruning inside each root independently —
   * the probe cost stays ~nprobe/C of (base + deltas), never a rescan.
-  * Delta-count growth is bounded by [[compact]], which folds committed
-  * deltas into a NEW base generation behind an atomic pointer swap —
-  * reader-safe, crash-idempotent (round 7) — with [[vacuum]] retiring
-  * superseded generations the way [[Commit.vacuum]] retires chunk
-  * files.
+  * Delta-count growth is bounded by [[compact]], which folds deltas
+  * into a NEW base generation in one checkpoint commit, with [[vacuum]]
+  * deleting what the log retired the way [[Commit.vacuum]] retires
+  * chunk files.
   */
 object StreamingIndex {
 
@@ -38,7 +36,9 @@ object StreamingIndex {
     * is loaded once and frozen for the life of the query — balance
     * drift under a shifting embedding distribution is observable via
     * [[SimilarityOps.ivfCellStats]] and fixed by a rebuild with
-    * `refineIters > 0`.
+    * `refineIters > 0`. An epoch at or below the log's last epoch —
+    * committed, folded by a compaction, or carried through a rebuild —
+    * is a replay and is skipped.
     */
   def run(
       spark: SparkSession,
@@ -52,155 +52,66 @@ object StreamingIndex {
     val reader = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(vecsDir)
-    Files.createDirectories(Paths.get(indexDir, "_delta_manifest"))
     reader.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val manifest = SimilarityOps.ivfDeltaManifest(indexDir, epochId)
-        // a replayed epoch is already committed (manifest) OR already
-        // folded into the base by a compaction that retired its
-        // manifest — re-committing a folded epoch would double-count.
-        // maxFoldedEpoch backstops the folded list after vacuum prunes
-        // it: any epoch id at or below it is in some base generation
-        val (_, folded, maxFolded) =
-          SimilarityOps.ivfReadGenerationFull(indexDir)
-        if (!Files.exists(manifest) && epochId > maxFolded &&
-            !folded.contains(s"epoch-$epochId")) {
-          val deltaPath = SimilarityOps.ivfDeltaPath(indexDir, epochId)
+        TableLog.commitEpoch(indexDir, epochId) {
+          val delta = SimilarityOps.ivfDeltaPath(indexDir, epochId)
           SimilarityOps.assignCells(batch, index)
             .sortWithinPartitions(col("cell"))
             .write.mode("overwrite").partitionBy("cell")
-            .parquet(deltaPath)
-          val rows = spark.read.parquet(deltaPath).count()
-          val tmp = Paths.get(indexDir, "_delta_manifest",
-            s".epoch-$epochId.json.tmp")
-          Files.writeString(tmp, s"""{"epoch":$epochId,"rowCount":$rows}""")
-          Files.move(tmp, manifest,
-            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+            .parquet(delta)
+          Seq(TableLog.Entry(delta.stripPrefix(s"$indexDir/")))
         }
-        (): Unit
       }
       .trigger(if (continuous) Trigger.ProcessingTime(0) else Trigger.AvailableNow())
       .start()
   }
 
-  /** Fold every live committed delta (streaming epochs AND
+  /** Fold every live delta (streaming epochs AND
     * [[SimilarityOps.ivfAppend]] batch deltas) into a NEW base
     * generation, so query plans return to a single pruned scan per
     * probe (many small deltas = many scan branches and small files —
     * the LSM compaction moment; parity with [[Commit.compact]]).
     *
-    * Reader-safe by construction (round 7 — the round-6 form appended
-    * into the live base and needed a maintenance window): the folded
-    * base is written to the NEXT generation directory
-    * (`cells-gen<N+1>`), which no reader resolves yet, and the ONLY
-    * commit point is the atomic generation-pointer swap
-    * ([[SimilarityOps.ivfWriteGeneration]]) — a reader loads either
-    * the old generation plus its deltas or the new generation without
-    * them, never a mix, so there is no transient double-count window.
-    * Handles loaded BEFORE the swap keep answering from the old
-    * generation's intact files until [[vacuum]] retires them.
-    *
-    * Crash-safe and idempotent (advisor, round 6): the pointer records
-    * the FOLDED token set, and [[SimilarityOps.ivfCommittedDeltaTokens]]
-    * excludes folded tokens even while their manifests linger — a
-    * crash between the swap and manifest retirement double-counts
-    * nothing, and a replayed compact finds no live token to re-fold
-    * (it only finishes the retirement). A crash BEFORE the swap leaves
-    * the pointer on the old generation; the retry overwrites the
-    * half-written next-generation directory. Uncommitted delta dirs
-    * are left untouched for their replay; streaming ingestion needs no
-    * pause — it writes NEW epochs, which compact doesn't touch.
+    * The folded base is written to the next generation's directory,
+    * which no reader resolves yet; the one commit point is a checkpoint
+    * that adds it and removes the old base and the folded deltas. A
+    * reader loads either side of that commit, never a mix, and handles
+    * loaded before it keep answering from intact files until
+    * [[vacuum]]. A delta committed while the fold runs makes the commit
+    * lose its version race; the retry keeps that delta live for the
+    * next compaction. A crash before the commit leaves the index as it
+    * was; the retry overwrites the half-written directory.
     */
-  def compact(spark: SparkSession, indexDir: String): Unit =
-    compactImpl(spark, indexDir, () => ())
-
-  /** [[compact]] with a test seam after the token listing — the only
-    * way to exercise the listing-vs-fold race deterministically.
-    */
-  private[graft] def compactImpl(
-      spark: SparkSession, indexDir: String,
-      afterListing: () => Unit): Unit = {
-    val (gen, folded, maxFolded) =
-      SimilarityOps.ivfReadGenerationFull(indexDir)
-    // finish a crashed prior compaction: retire manifests of tokens
-    // already folded into the current base (readers exclude them via
-    // the pointer either way)
-    folded.foreach(t =>
-      Files.deleteIfExists(SimilarityOps.ivfDeltaManifestToken(indexDir, t)))
-    val tokens = SimilarityOps.ivfCommittedDeltaTokens(indexDir)
-    if (tokens.isEmpty) return
-    afterListing()
-    // Pin the fold input to EXACTLY the token set recorded as folded
-    // below: ivfLoad performs its own (second) manifest listing, so an
-    // epoch committing between the listing above and the load would be
-    // folded into the new generation while staying a live delta (its
-    // token absent from the folded set) — a permanent double count.
-    // With the delta set overridden, fold-input ≡ recorded-folded-set
-    // by construction; a concurrently committed epoch stays a live
-    // delta for the NEXT compaction.
-    val index = SimilarityOps.ivfLoad(indexDir).copy(
-      deltas = tokens.map(t => SimilarityOps.ivfDeltaPathToken(indexDir, t)))
-    val newGen = gen + 1
-    // one read per root (a multi-root read trips partition-discovery's
-    // conflicting-directory check: delta dirs aren't partition dirs);
-    // a quantized index folds its SQ8 columns through unchanged
-    val dataCols = Seq(col(index.idCol), col(index.vecCol)) ++
-      (if (index.quantized)
-        Seq(col("code8"), col("scale8"), col("cnorm8")) else Nil)
-    SimilarityOps.readCells(spark, index)
-      .select(dataCols :+ col("cell"): _*)
-      .sortWithinPartitions(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(SimilarityOps.ivfCellsPath(indexDir, newGen))
-    // drop folded entries whose delta dirs are already vacuumed (they
-    // can never resurrect), keep the rest — the exclusion list stays
-    // bounded by the un-vacuumed token count
-    val stillOnDisk = folded.filter(t => Files.isDirectory(
-      Paths.get(SimilarityOps.ivfDeltaPathToken(indexDir, t))))
-    // maxFoldedEpoch advances monotonically over the streaming epochs
-    // folded THIS time — the permanent (one-long) replay backstop that
-    // survives folded-list pruning and vacuum
-    val newMaxFolded = (maxFolded +: tokens.collect {
-      case t if t.startsWith("epoch-") => t.stripPrefix("epoch-").toLong
-    }).max
-    // THE commit point: atomic swap to the new generation + folded set
-    SimilarityOps.ivfWriteGeneration(indexDir, newGen,
-      stillOnDisk ++ tokens, newMaxFolded)
-    // retirement (idempotent cleanup — readers already exclude these)
-    tokens.foreach(t =>
-      Files.deleteIfExists(SimilarityOps.ivfDeltaManifestToken(indexDir, t)))
-  }
-
-  /** Retire what only PRE-compaction readers could still need: base
-    * generations below the current pointer and the delta dirs of
-    * folded tokens (then prune the folded list — gone dirs can never
-    * resurrect). Run when no reader holds a pre-compaction handle
-    * (parity with [[Commit.vacuum]]); [[compact]] itself never blocks
-    * or breaks readers. Uncommitted delta dirs (crash leftovers
-    * awaiting replay) are untouched.
-    */
-  def vacuum(indexDir: String): Unit = {
-    val (gen, folded, maxFolded) =
-      SimilarityOps.ivfReadGenerationFull(indexDir)
-    (0 until gen).foreach(g =>
-      SimilarityOps.deleteRecursively(SimilarityOps.ivfCellsPath(indexDir, g)))
-    folded.foreach { t =>
-      // retire any LINGERING manifest first (advisor, round 7): if the
-      // prior compaction crashed between its pointer swap and manifest
-      // retirement, the folded token's manifest still exists — pruning
-      // the folded list below while it lingers would make a later
-      // ivfLoad list the token as live and resolve a delta dir this
-      // loop just deleted. Mirrors compactImpl's
-      // finish-crashed-compaction step.
-      Files.deleteIfExists(SimilarityOps.ivfDeltaManifestToken(indexDir, t))
-      SimilarityOps.deleteRecursively(
-        SimilarityOps.ivfDeltaPathToken(indexDir, t))
+  def compact(spark: SparkSession, indexDir: String): Unit = {
+    val index = SimilarityOps.indexAt(indexDir, TableLog.snapshot(indexDir))
+    if (index.deltas.nonEmpty) {
+      val gen = index.gen + 1
+      // one read per root (a multi-root read trips partition-discovery's
+      // conflicting-directory check: delta dirs aren't partition dirs);
+      // a quantized index folds its SQ8 columns through unchanged
+      val dataCols = Seq(col(index.idCol), col(index.vecCol)) ++
+        (if (index.quantized)
+          Seq(col("code8"), col("scale8"), col("cnorm8")) else Nil)
+      SimilarityOps.readCells(spark, index)
+        .select(dataCols :+ col("cell"): _*)
+        .sortWithinPartitions(col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(SimilarityOps.ivfCellsPath(indexDir, gen))
+      val folded = index.dataPaths.map(_.stripPrefix(s"$indexDir/")).toSet
+      val base = SimilarityOps.ivfCellsPath(indexDir, gen).stripPrefix(s"$indexDir/")
+      TableLog.commit(indexDir)(s => Option.when(folded.subsetOf(s.paths.toSet))(
+        TableLog.Record(s.live.filterNot(e => folded(e.path)) :+ TableLog.Entry(base),
+          folded.toSeq.sorted, s.info + ("gen" -> gen.toString), checkpoint = true)))
     }
-    // folded list prunes (dirs are gone, nothing can resurrect);
-    // maxFoldedEpoch is PRESERVED — it is the one-long permanent
-    // backstop that keeps a crashed-epoch replay arriving after this
-    // vacuum from re-committing rows the base already holds
-    SimilarityOps.ivfWriteGeneration(indexDir, gen, Set.empty, maxFolded)
   }
+
+  /** Delete what only pre-compaction (or pre-rebuild) readers could
+    * still need: every path the log removed that the current snapshot
+    * no longer holds. Run when no reader holds such a handle (parity
+    * with [[Commit.vacuum]]); [[compact]] itself never blocks or breaks
+    * readers. Uncommitted delta dirs (crash leftovers) are untouched.
+    */
+  def vacuum(indexDir: String): Unit = TableLog.vacuum(indexDir)
 }

@@ -30,11 +30,7 @@ object CorpusWarm {
       val reusable = java.nio.file.Files.exists(sentinel) &&
         java.nio.file.Files.readString(sentinel) == expected
       if (!reusable) {
-        if (java.nio.file.Files.isDirectory(staged)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(staged).iterator().asScala.toSeq
-            .reverse.foreach(java.nio.file.Files.delete)
-        }
+        graft.pipeline.TableLog.deleteRecursively(staged)
         import org.apache.spark.sql.functions._
         spark.read.parquet(s"$dir/docs")
           .withColumn("chunk", pmod(xxhash64(col("doc_id")), lit(n)))

@@ -389,7 +389,7 @@ class DedupOpsSpec extends AnyFunSuite {
     // the arriving-corpus path: appending a batch must (1) place each
     // new vector in the exact cell a full rebuild would (centroids
     // frozen → same argmax), (2) never rewrite existing files — since
-    // round 7 the batch lands as a COMMITTED DELTA (manifest-gated,
+    // round 7 the batch lands as a COMMITTED DELTA (log-commit-gated,
     // crash-atomic), not a raw base append — and (3) make planted
     // twins immediately visible to queries.
     val vrng = new scala.util.Random(31)
@@ -410,7 +410,7 @@ class DedupOpsSpec extends AnyFunSuite {
       .flatMap(d => d.listFiles().map(f => f.getPath -> f.lastModified()))
       .toMap
     // crash-sim FIRST (advisor, round 6): a delta dir on disk with no
-    // manifest — the exact state a crash mid-append leaves — must be
+    // commit — the exact state a crash mid-append leaves — must be
     // invisible to every load and query, and must not poison the
     // subsequent committed append
     Seq((7777L, randVec())).toDF("vec_id", "embedding")
@@ -420,7 +420,7 @@ class DedupOpsSpec extends AnyFunSuite {
     assert(SimilarityOps.ivfLoad(s"$root/grown").deltas.isEmpty)
     val grown2 = SimilarityOps.ivfAppend(grown,
       (rest :+ (999L, v0)).toDF("vec_id", "embedding"))
-    // the commit point is the manifest: exactly one committed delta,
+    // the commit point is the log commit: exactly one committed delta,
     // visible to a fresh reload identically
     assert(grown2.deltas.size == 1, grown2.deltas.toString)
     assert(SimilarityOps.ivfLoad(s"$root/grown").deltas == grown2.deltas)

@@ -112,7 +112,7 @@ class PipelineSpec extends AnyFunSuite {
     val bad = Commit.run(spark, docs, media, badDir, "mm-1",
       chunks = 2, partitions = 8, expected = Some(corrupted))
     assert(bad.committed.map(_.mismatchCount).sum == 1L)
-    // the counter round-trips through the on-disk manifest and compact
+    // the counter round-trips through the on-disk log and compact
     assert(Commit.committedChunks(badDir).values.map(_.mismatchCount).sum == 1L)
     assert(Commit.compact(badDir).mismatchCount == 1L)
   }
@@ -238,7 +238,46 @@ class PipelineSpec extends AnyFunSuite {
     assert(Commit.readOutput(spark, outDir).count() == golden.count())
     val snap = Commit.compact(outDir)
     assert(snap.rowCount == golden.count())
-    assert(Files.exists(Commit.manifestDir(outDir).resolve("snapshot.json")))
+    // the snapshot summary is the newest commit: a checkpoint restating
+    // both chunks with the aggregate lineage
+    val cp = TableLog.read(outDir, TableLog.snapshot(outDir).version)
+    assert(cp.checkpoint && cp.add.map(_.path).sorted == Seq("data/chunk=0", "data/chunk=1"))
+    assert(cp.info("rowCount") == golden.count().toString && cp.info("chunks") == "2")
+    assert(Commit.committedChunks(outDir).values.map(_.rowCount).sum == golden.count())
+  }
+
+  test("readOutput reads committed chunks only: a valid uncommitted chunk dir stays invisible") {
+    val outDir = Files.createTempDirectory("graft_uncommitted").toString
+    Commit.run(spark, docs, media, outDir, "run-u", chunks = 2, partitions = 8)
+    // a VALID parquet chunk no commit holds (a write that died before
+    // its commit), with rows of its own
+    Commit.readOutput(spark, outDir).drop("chunk").limit(3)
+      .withColumn("doc_id", concat(lit("ghost-"), col("doc_id")))
+      .write.parquet(s"$outDir/data/chunk=9")
+    val out = Commit.readOutput(spark, outDir)
+    assert(out.count() == golden.count())
+    assert(out.filter(col("doc_id").startsWith("ghost-")).isEmpty)
+    assert(mismatches(out, golden) == 0L)
+  }
+
+  test("zip bomb: an archive inflating past 100 MB is one error span; the partition survives") {
+    import spark.implicits._
+    val bomb = graft.kernel.ZipExplode.build(
+      Seq("zeros.bin" -> new Array[Byte]((101 << 20) + 1)))
+    val docsIn = Seq(
+      graft.model.Doc("bomb", Seq(graft.model.Span("zip", "", "m/bomb", 0))),
+      graft.model.Doc("plain", Seq(graft.model.Span("text", "still here", "", 0))))
+    val d = spark.createDataset(docsIn).toDF().coalesce(1)
+    val m = Seq(graft.model.MediaBlob("m/bomb", bomb)).toDF()
+    val byId = ExtractionPipeline.extract(d, m, partitions = 1).collect()
+      .map(r => r.getString(0) -> r.getSeq[org.apache.spark.sql.Row](1)).toMap
+    assert(byId.keySet == Set("bomb", "plain"))
+    assert(byId("bomb").map(_.getString(0)) == Seq("error"), byId("bomb"))
+    assert(byId("plain").map(_.getString(1)) == Seq("still here"))
+    val errs = ExtractionPipeline.errors(ExtractionPipeline.extractSubs(d, m, 1))
+      .select("error").as[String].collect()
+    assert(errs.length == 1 && errs.head.contains("inflates past 104857600 bytes"),
+      errs.mkString("; "))
   }
 
   test("NULL media_ref, empty spans, and missing media never vanish silently") {

@@ -54,7 +54,7 @@ class StreamingIndexSpec extends AnyFunSuite {
     val idx2 = SimilarityOps.ivfLoad(indexDir)
     assert(idx2.deltas.size == 2, idx2.deltas.toString)
 
-    // a crashed epoch: delta rows on disk, manifest never renamed —
+    // a crashed epoch: delta rows on disk, never committed —
     // invisible to load and to every query until its replay commits it
     (Seq((7777L, randVec()))).toDF("vec_id", "embedding")
       .withColumn("cell", lit(0))
@@ -108,16 +108,10 @@ class StreamingIndexSpec extends AnyFunSuite {
     assert(q(idx2) == streamed)
     assert(cellsOf(idx2) == cellsOf(full))
 
-    // crash window between the pointer swap and manifest retirement:
-    // a lingering manifest of a folded epoch is EXCLUDED by the
-    // pointer's folded set (no double count), and a replayed compact
-    // only finishes the retirement — row counts never grow
-    val resurrected = SimilarityOps.ivfDeltaManifest(indexDir, 0L)
-    Files.writeString(resurrected, """{"epoch":0,"rowCount":41}""")
-    assert(SimilarityOps.ivfLoad(indexDir).deltas.isEmpty)
+    // a replayed compact finds nothing live to fold: no new
+    // generation, row counts never grow
     val rowsBefore = cellsOf(idx3).size
-    StreamingIndex.compact(spark, indexDir) // replay: retirement only
-    assert(!Files.exists(resurrected))
+    StreamingIndex.compact(spark, indexDir)
     val idx4 = SimilarityOps.ivfLoad(indexDir)
     assert(idx4.gen == 1, idx4.toString) // no new generation spawned
     assert(cellsOf(idx4).size == rowsBefore)
@@ -135,15 +129,15 @@ class StreamingIndexSpec extends AnyFunSuite {
       Paths.get(SimilarityOps.ivfDeltaPath(indexDir, 999L))))
     assert(q(SimilarityOps.ivfLoad(indexDir)) == streamed)
 
-    // maxFoldedEpoch SURVIVES vacuum (the one-long permanent replay
-    // backstop: a crashed epoch ≤ 1 replaying after the folded list
-    // was pruned is still skipped, never re-committed)...
-    val (gAfter, foldedAfter, maxFolded) =
-      SimilarityOps.ivfReadGenerationFull(indexDir)
-    assert(gAfter == 1 && foldedAfter.isEmpty && maxFolded == 1L,
-      s"($gAfter, $foldedAfter, $maxFolded)")
+    // the last epoch SURVIVES compact + vacuum in the log (the replay
+    // backstop): epoch 1 replayed after its delta was folded and
+    // deleted — its checkpoint commit lost, as a crash after the log
+    // commit leaves it — is skipped, never re-committed...
+    assert(TableLog.snapshot(indexDir).lastEpoch == 1L)
+    Seq("1", ".1.crc").foreach(f =>
+      Files.deleteIfExists(Paths.get(ckpt, "commits", f)))
     // ...while NEW arrivals on the same checkpoint continue normally
-    // (epoch 2 > maxFoldedEpoch) — life goes on after compact + vacuum
+    // (epoch 2 > the last epoch) — life goes on after compact + vacuum
     Seq((5555L, randVec())).toDF("vec_id", "embedding")
       .coalesce(1).write.mode("append").parquet(streamDir)
     StreamingIndex.run(spark, streamDir, indexDir, ckpt).awaitTermination()
@@ -151,6 +145,7 @@ class StreamingIndexSpec extends AnyFunSuite {
     assert(idx5.deltas.size == 1, idx5.deltas.toString) // the epoch-2 delta
     assert(idx5.dataPaths.map(spark.read.parquet(_))
       .reduce(_.unionByName(_)).count() == 202L) // 201 compacted + 1 new
+    assert(TableLog.snapshot(indexDir).lastEpoch == 2L)
   }
 
   test("compact is reader-safe with batch appends in the mix and idempotent under replay") {
@@ -187,11 +182,12 @@ class StreamingIndexSpec extends AnyFunSuite {
   }
 
   test("a delta committed DURING compaction stays a live delta — counted once, folded next time") {
-    // the listing-vs-fold race: compact lists the committed tokens,
-    // then a concurrent writer commits a new delta before the fold
-    // reads the rows. The fold input is pinned to the LISTED set, so
-    // the late delta must neither fold early (it would double-count —
-    // in the base generation AND still manifest-live) nor vanish.
+    // the snapshot-vs-commit race: compact folds the deltas of its
+    // snapshot, then a concurrent writer commits a new delta before
+    // compact's checkpoint is published. The checkpoint loses the
+    // version race and is rebuilt on the newer snapshot, so the late
+    // delta must neither fold early (it would double-count — in the
+    // base generation AND still live) nor vanish.
     val root = Files.createTempDirectory("graft_sidx3").toString
     val indexDir = s"$root/index"
     val vrng = new scala.util.Random(43)
@@ -202,10 +198,18 @@ class StreamingIndexSpec extends AnyFunSuite {
       "vec_id", "embedding", indexDir, centroidEvery = 16, maxCentroids = 8)
     SimilarityOps.ivfAppend(SimilarityOps.ivfLoad(indexDir),
       all.slice(120, 160).toDF("vec_id", "embedding"))
-    StreamingIndex.compactImpl(spark, indexDir, afterListing = () =>
-      // the concurrent commit, interleaved exactly in the race window
-      SimilarityOps.ivfAppend(SimilarityOps.ivfLoad(indexDir),
-        all.drop(160).toDF("vec_id", "embedding")))
+    // the concurrent commit, interleaved exactly in the race window:
+    // at compact's first publish step, after its fold was written
+    var fired = false
+    TableLog.onStep = (r, step) =>
+      if (r == indexDir && step == "commit" && !fired) {
+        fired = true
+        SimilarityOps.ivfAppend(SimilarityOps.ivfLoad(indexDir),
+          all.drop(160).toDF("vec_id", "embedding"))
+      }
+    try StreamingIndex.compact(spark, indexDir)
+    finally TableLog.onStep = (_, _) => ()
+    assert(fired)
     val mid = SimilarityOps.ivfLoad(indexDir)
     def totalRows(idx: SimilarityOps.IvfIndex): Long =
       idx.dataPaths.map(spark.read.parquet(_)).reduce(_.unionByName(_)).count()
@@ -262,9 +266,11 @@ class StreamingIndexSpec extends AnyFunSuite {
     assert(sq(folded) == before)
   }
 
-  test("rebuild preserves maxFoldedEpoch; vacuum retires lingering folded manifests") {
+  test("rebuild keeps the replay backstop; vacuum spares live files") {
     val root = Files.createTempDirectory("graft_sidx_r8").toString
     val indexDir = s"$root/index"
+    val streamDir = s"$root/vecs"
+    val ckpt = s"$root/ckpt"
     val vrng = new scala.util.Random(41)
     def randVec(): Array[Float] =
       Array.fill(16)((vrng.nextDouble() * 2 - 1).toFloat)
@@ -272,36 +278,40 @@ class StreamingIndexSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     SimilarityOps.ivfBuild(emb, "vec_id", "embedding", indexDir,
       centroidEvery = 16, maxCentroids = 4)
-    // simulate a lineage that has already folded epochs up to 7
-    SimilarityOps.ivfWriteGeneration(indexDir, 0, Set.empty, 7L)
-    // rebuild in place: the replay backstop must SURVIVE the reset
-    // (advisor, round 7 — the old reset dropped it to -1)
+    // one streamed epoch (epoch 0, three vectors)
+    (64 until 67).map(i => (i.toLong, randVec())).toDF("vec_id", "embedding")
+      .coalesce(1).write.parquet(streamDir)
+    StreamingIndex.run(spark, streamDir, indexDir, ckpt).awaitTermination()
+    assert(TableLog.snapshot(indexDir).lastEpoch == 0L)
+    // rebuild in place: the deltas go, the replay backstop SURVIVES
     SimilarityOps.ivfBuild(emb, "vec_id", "embedding", indexDir,
       centroidEvery = 16, maxCentroids = 4)
-    val (gen, folded, maxFolded) =
-      SimilarityOps.ivfReadGenerationFull(indexDir)
-    assert(gen == 0 && folded.isEmpty && maxFolded == 7L,
-      s"($gen, $folded, $maxFolded)")
+    val rebuilt = SimilarityOps.ivfLoad(indexDir)
+    assert(rebuilt.gen == 1 && rebuilt.deltas.isEmpty, rebuilt.toString)
+    assert(TableLog.snapshot(indexDir).lastEpoch == 0L)
+    // epoch 0 replayed against the rebuilt index (its checkpoint
+    // commit lost) is skipped: the index keeps exactly the 64 rows
+    Seq("0", ".0.crc").foreach(f =>
+      Files.deleteIfExists(Paths.get(ckpt, "commits", f)))
+    StreamingIndex.run(spark, streamDir, indexDir, ckpt).awaitTermination()
+    assert(SimilarityOps.readCells(spark, SimilarityOps.ivfLoad(indexDir))
+      .count() == 64L)
 
-    // vacuum during the compaction crash window: append a delta, fold
-    // it, then put back its manifest (as a crash between swap and
-    // retirement would leave it) and delete the folded list's knowledge
-    val idx = SimilarityOps.ivfLoad(indexDir)
-    SimilarityOps.ivfAppend(idx,
+    // vacuum after an append + compaction: the pre-compaction handle
+    // answers until vacuum; vacuum deletes the retired base, delta and
+    // the pre-rebuild files, and the reloaded handle loses no rows
+    SimilarityOps.ivfAppend(rebuilt,
       Seq((1000L, randVec())).toDF("vec_id", "embedding"))
     val before = SimilarityOps.ivfLoad(indexDir)
     val rowsBefore = SimilarityOps.readCells(spark, before).count()
     StreamingIndex.compact(spark, indexDir)
-    // re-plant the manifest: the crash-window shape (folded token with
-    // a lingering manifest)
-    Files.writeString(
-      SimilarityOps.ivfDeltaManifestToken(indexDir, "append-0"),
-      """{"token":"append-0","rowCount":1}""")
+    assert(SimilarityOps.readCells(spark, before).count() == rowsBefore)
     StreamingIndex.vacuum(indexDir)
-    // the lingering manifest is retired with the folded list, so the
-    // reloaded handle neither lists a dead delta nor loses rows
+    (before.dataPaths ++ Seq(s"$indexDir/cells", s"$indexDir/centroids.json",
+        SimilarityOps.ivfDeltaPath(indexDir, 0L)))
+      .foreach(p => assert(!Files.exists(Paths.get(p)), p))
     val after = SimilarityOps.ivfLoad(indexDir)
-    assert(after.deltas.isEmpty, after.deltas.toString)
+    assert(after.gen == 2 && after.deltas.isEmpty, after.toString)
     assert(SimilarityOps.readCells(spark, after).count() == rowsBefore)
   }
 }
